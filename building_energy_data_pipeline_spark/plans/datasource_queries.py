@@ -9,13 +9,13 @@ Streaming job (q258, VERDICT r9 #5).
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import pydatasource as pds
 from ..sources.readers import ensure_session_confs, load_table
+from ..streaming.drain import sink_name
 from .registry import query
 
 #: q253's telemetry shape: one sensor per nation key so the join is
@@ -114,10 +114,6 @@ def q253_python_datasource_scan(
 #: ONE DAY PER MICRO-BATCH by the connector's stream reader
 _STREAM_DAYS = 10
 
-#: last memory-sink name: same one-named-sink-per-query hygiene as
-#: ``streaming_queries._SINK_SLOTS`` (bench ×3 re-invokes the query)
-_Q258_SINK: list[str] = []
-
 
 def _q258_oracle() -> str:
     formula = (
@@ -173,16 +169,10 @@ def q258_python_datasource_stream(
     job uses to re-emit an uncommitted range — exactly-once without
     any sink-side dedup.
     """
-    import shutil
     import time
 
     ensure_session_confs(spark)
     pds.register_telemetry_source(spark)
-    while _Q258_SINK:
-        try:
-            spark.catalog.dropTempView(_Q258_SINK.pop())
-        except Exception:  # noqa: BLE001 — previous session may be gone
-            pass
     stream = (
         spark.readStream.format("synthetic_telemetry")
         .option("sensors", str(_SENSORS))
@@ -197,15 +187,18 @@ def q258_python_datasource_stream(
             F.max("reading").alias("max_reading"),
         )
     )
-    name = "q258_sink_" + uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="q258_ckpt_")
-    _Q258_SINK.append(name)
+    # one named memory sink per query (bench ×3 re-invokes it): the
+    # slot lives in ``streaming.drain._SINK_SLOTS``
+    name = sink_name(spark, "q258")
     per_sensor = _STREAM_DAYS * _SLOTS
+    ckpt = tempfile.TemporaryDirectory(
+        prefix="q258_ckpt_", ignore_cleanup_errors=True
+    )
     q = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", ckpt.name)
         .start()
     )
     try:
@@ -226,7 +219,7 @@ def q258_python_datasource_stream(
             )
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+        ckpt.cleanup()
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey"
     )

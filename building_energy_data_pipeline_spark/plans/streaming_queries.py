@@ -12,71 +12,47 @@ demonstrated rather than asserted.
 
 from __future__ import annotations
 
-import atexit
+import glob
+import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.scalar import dec_sum, dec_sum_sql
-from ..sources.readers import read_events_stream
+from ..functions.scalar import ROUND_TO, dec_sum, dec_sum_sql
+from ..sources.readers import load_table, read_events_stream
+from ..streaming.drain import (
+    ParquetState,
+    drain,
+    drain_to_memory,
+    replay_source,
+)
+from ..streaming.statestore import (
+    enable_rocksdb_state,
+    read_state,
+    restore_state_conf,
+)
 from .registry import query
 
 
-#: last memory-sink name per query tag: re-invoking the same query
-#: unbinds the previous invocation's temp-view name, so a long
-#: session (bench ×3, registry sweeps) keeps at most one NAMED sink
-#: per query. Unbinding only drops the name — a caller still holding
-#: the previous returned DataFrame keeps working (its plan references
-#: the relation, which is freed when that DataFrame is GC'd).
-_SINK_SLOTS: dict[str, str] = {}
+def _scratch(prefix: str) -> tempfile.TemporaryDirectory:
+    """Per-invocation scratch directory (staged source, checkpoint,
+    fold state), removed when the query's ``with`` block exits."""
+    return tempfile.TemporaryDirectory(
+        prefix=prefix, ignore_cleanup_errors=True
+    )
 
 
-def _drain_to_memory(stream, tag: str, output_mode: str) -> "DataFrame":
-    """Run a finite stream to completion (``availableNow``) against a
-    memory sink and return the sink table. Cleanup discipline: the
-    checkpoint directory is deleted once the query terminates (a
-    finished availableNow run is never restarted), and the previous
-    invocation's sink view for the same ``tag`` is unbound (see
-    ``_SINK_SLOTS``). A drain that exceeds the timeout is stopped and
-    raised — returning a partially-filled sink would misreport a
-    timeout as a data mismatch."""
-    import shutil
-
-    spark = stream.sparkSession
-    prev = _SINK_SLOTS.pop(tag, None)
-    if prev is not None:
-        try:
-            spark.catalog.dropTempView(prev)
-        except Exception:  # noqa: BLE001 — previous session may be gone
-            pass
-    name = f"{tag}_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"{tag}_ckpt_")
-    # record the slot BEFORE starting: the memory sink registers the
-    # temp view at .start(), so a timed-out/failed drain must still
-    # leave the view tracked — the next invocation for this tag then
-    # unbinds it instead of leaking one uuid-named view per retry
-    _SINK_SLOTS[tag] = name
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                f"{tag}: stream did not drain within 300s"
-            )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
-
+def _drain_batches(stream: DataFrame, fold, base_dir: str, tag: str):
+    """Drain ``stream`` through the ``foreachBatch`` function ``fold``,
+    checkpointed under ``base_dir``."""
+    return drain(
+        stream.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", os.path.join(base_dir, "ckpt")
+        ),
+        tag,
+    )
 
 
 @query(
@@ -122,7 +98,7 @@ def q52_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _drain_to_memory(stream, "q52", "complete")
+    return drain_to_memory(stream, "q52", "complete")
 
 
 @query(
@@ -188,7 +164,7 @@ def q62_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "session_start", "session_end", "n_events", "sum_value"
         )
     )
-    return _drain_to_memory(stream, "q62", "complete")
+    return drain_to_memory(stream, "q62", "complete")
 
 
 @query(
@@ -244,7 +220,7 @@ def _drain_gap_stream(spark, stats_stream, tag: str) -> DataFrame:
     strictly with every emission for a key, so max-n_events IS the
     last state, independent of sink row order or how the file source
     batches."""
-    sink = _drain_to_memory(stats_stream, tag, "update")
+    sink = drain_to_memory(stats_stream, tag, "update")
     w = W.partitionBy("user_id", "event_type").orderBy(
         F.col("n_events").desc()
     )
@@ -318,7 +294,7 @@ def q96_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "event_type", "value")
     )
     return (
-        _drain_to_memory(deduped, "q96", "append")
+        drain_to_memory(deduped, "q96", "append")
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -390,7 +366,7 @@ def q100_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lat_us"),
     )
     return (
-        _drain_to_memory(joined, "q100", "append")
+        drain_to_memory(joined, "q100", "append")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_pairs"),
@@ -432,80 +408,45 @@ def q115_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange-free, and the rewrite is a partition-targeted MERGE
     rather than this demo's full-state swap.
     """
-    import os
-    import shutil
-
     from ..operators.cdc import merge_upsert
 
-    base_dir = tempfile.mkdtemp(prefix="q115_cdc_")
-    src_dir = os.path.join(base_dir, "changes")
-    ckpt = os.path.join(base_dir, "ckpt")
-    state: dict[str, str] = {}  # current state dir, mutated per batch
-
-    try:
+    with _scratch("q115_cdc_") as base_dir:
+        state = ParquetState(base_dir)
         # stage the change log as multiple files (repartition range on
         # version keeps each file a contiguous LSN slice — realistic
         # change-log shipping; correctness needs neither). load_table,
         # NOT raw spark.read: a nanos-vintage events.ts fails schema
         # conversion under a plain session before pruning can drop it
         # (the round-1 failure class test_driver_contract pins)
-        from ..sources.readers import load_table
-
         static = load_table(spark, sf_dir, "events")
-        static.select(
-            "user_id", "event_type", "value",
-            F.col("event_id").alias("version"),
-        ).repartitionByRange(4, "version").write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_type string, value double,"
-                " version long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+        stream = replay_source(
+            static.select(
+                "user_id", "event_type", "value",
+                F.col("event_id").alias("version"),
+            ),
+            os.path.join(base_dir, "changes"),
+            "version",
         )
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            s = batch_df.sparkSession
-            prev = state.get("dir")
-            base = (
-                s.read.parquet(prev)
-                if prev is not None
-                else s.createDataFrame(
-                    [],
-                    "user_id long, event_type string, value double,"
-                    " version long",
+            base = state.read()
+            if base is None:
+                base = batch_df.sparkSession.createDataFrame(
+                    [], batch_df.schema
                 )
-            )
             merged = merge_upsert(
                 base, batch_df, ["user_id"], "version"
             )
-            nxt = os.path.join(base_dir, f"state_v{batch_id}")
-            merged.write.mode("overwrite").parquet(nxt)
-            old = state.get("dir")
-            state["dir"] = nxt
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
+            state.commit(merged, batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q115: change stream did not drain")
+        _drain_batches(stream, apply_batch, base_dir, "q115")
 
-        final = spark.read.parquet(state["dir"])
         return (
-            final.filter(F.col("event_type") != "error")
+            state.read()
+            .filter(F.col("event_type") != "error")
             .select("user_id", "event_type", "value", "version")
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 def _q126_oracle() -> str:
@@ -538,27 +479,16 @@ def q126_streaming_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline applied to the index path). Centroid drift is handled
     by periodic re-training (q117) + bucket rebuild, not per batch.
     """
-    import os
-    import shutil
-
     from ..operators.similarity import assign_centroids
-    from ..sources.readers import load_table
 
-    base_dir = tempfile.mkdtemp(prefix="q126_index_")
-    src_dir = os.path.join(base_dir, "vectors")
-    idx_dir = os.path.join(base_dir, "postings")
-    ckpt = os.path.join(base_dir, "ckpt")
-
-    try:
+    with _scratch("q126_index_") as base_dir:
+        idx_dir = os.path.join(base_dir, "postings")
         emb = load_table(spark, sf_dir, "embeddings")
         centroids = emb.filter("vec_id < 8").localCheckpoint()
-        emb.repartitionByRange(4, "vec_id").write.parquet(src_dir)
-
-        dims = emb.schema["embedding"].dataType.elementType.simpleString()
-        stream = (
-            spark.readStream.schema(f"vec_id long, embedding array<{dims}>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+        stream = replay_source(
+            emb.select("vec_id", "embedding"),
+            os.path.join(base_dir, "vectors"),
+            "vec_id",
         )
 
         def index_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -566,15 +496,7 @@ def q126_streaming_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id", "centroid_id"
             ).write.mode("append").parquet(idx_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(index_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q126: vector stream did not drain")
+        _drain_batches(stream, index_batch, base_dir, "q126")
 
         postings = spark.read.parquet(idx_dir)
         return (
@@ -585,8 +507,6 @@ def q126_streaming_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 def _q157_oracle() -> str:
@@ -620,37 +540,25 @@ def q157_streaming_sketch_maintenance(
     monitor rides a 100 TB ingest: per-batch cost tracks batch
     size, state stays constant-size forever.
     """
-    import os
-    import shutil
-
     from ..operators import sketch, text
-    from ..sources.readers import load_table
 
     tok = text.SPARK_TOKENS.format(col="text")
-    base_dir = tempfile.mkdtemp(prefix="q157_cms_")
-    src_dir = os.path.join(base_dir, "docs")
-    ckpt = os.path.join(base_dir, "ckpt")
-    state: dict = {}
 
-    try:
+    with _scratch("q157_cms_") as base_dir:
+        state = ParquetState(base_dir, "grid")
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        docs.repartitionByRange(4, "doc_id").write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+        stream = replay_source(
+            docs, os.path.join(base_dir, "docs"), "doc_id"
         )
 
         def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
             g = sketch.countmin_build(
                 batch_df.select(F.explode(F.expr(tok)).alias("tok"))
             )
-            prev = state.get("dir")
-            if prev is not None:
-                base = spark.read.parquet(prev)
+            base = state.read()
+            if base is not None:
                 g = (
                     g.select(
                         "row_id", "bucket", F.col("c").alias("c_new")
@@ -671,24 +579,11 @@ def q157_streaming_sketch_maintenance(
                         ).alias("c"),
                     )
                 )
-            nxt = os.path.join(base_dir, f"grid_v{batch_id}")
-            g.write.mode("overwrite").parquet(nxt)
-            old = state.get("dir")
-            state["dir"] = nxt
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
+            state.commit(g, batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q157: document stream did not drain")
+        _drain_batches(stream, merge_batch, base_dir, "q157")
 
-        grid = spark.read.parquet(state["dir"])
+        grid = state.read()
         exact = (
             docs.select(F.explode(F.expr(tok)).alias("tok"))
             .groupBy("tok")
@@ -708,8 +603,6 @@ def q157_streaming_sketch_maintenance(
             )
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 @query(
@@ -739,7 +632,6 @@ def q160_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     table + REFRESH contract documented (and unit-pinned) on
     ``enrich_stream``.
     """
-    from ..sources.readers import load_table
     from ..streaming.ingest import enrich_stream
 
     dim = load_table(spark, sf_dir, "customer").select(
@@ -759,7 +651,7 @@ def q160_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value").alias("sum_value"),
         )
     )
-    return _drain_to_memory(rollup, "q160", "complete")
+    return drain_to_memory(rollup, "q160", "complete")
 
 
 def _q168_oracle() -> str:
@@ -792,28 +684,17 @@ def q168_streaming_hll_maintenance(
     corpus-sized. A rolling distinct-token monitor rides a 100 TB
     ingest at constant state forever.
     """
-    import os
-    import shutil
-
     from ..operators import sketch, text
-    from ..sources.readers import load_table
 
     tok = text.SPARK_TOKENS.format(col="text")
-    base_dir = tempfile.mkdtemp(prefix="q168_hll_")
-    src_dir = os.path.join(base_dir, "docs")
-    ckpt = os.path.join(base_dir, "ckpt")
-    state: dict = {}
 
-    try:
+    with _scratch("q168_hll_") as base_dir:
+        state = ParquetState(base_dir, "regs")
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "text"
         )
-        docs.repartitionByRange(4, "doc_id").write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema("doc_id long, source string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+        stream = replay_source(
+            docs, os.path.join(base_dir, "docs"), "doc_id"
         )
 
         def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -824,9 +705,8 @@ def q168_streaming_hll_maintenance(
                 "tok",
                 ["source"],
             )
-            prev = state.get("dir")
-            if prev is not None:
-                base = spark.read.parquet(prev)
+            base = state.read()
+            if base is not None:
                 g = (
                     g.withColumnRenamed("register", "r_new")
                     .join(
@@ -843,24 +723,11 @@ def q168_streaming_hll_maintenance(
                         ).alias("register"),
                     )
                 )
-            nxt = os.path.join(base_dir, f"regs_v{batch_id}")
-            g.write.mode("overwrite").parquet(nxt)
-            old = state.get("dir")
-            state["dir"] = nxt
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
+            state.commit(g, batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q168: document stream did not drain")
+        _drain_batches(stream, merge_batch, base_dir, "q168")
 
-        regs = spark.read.parquet(state["dir"])
+        regs = state.read()
         est = sketch.hll_estimate(regs, ["source"])
         exact = (
             docs.select("source", F.explode(F.expr(tok)).alias("tok"))
@@ -881,8 +748,6 @@ def q168_streaming_hll_maintenance(
             )
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -954,16 +819,7 @@ def q186_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars per key, forever. This is how an order-dependent
     sequential statistic rides an unbounded stream.
     """
-    import os
-    import shutil
-
     from .analytics_queries import _CUSUM_H, _CUSUM_SLACK
-    from ..sources.readers import load_table
-
-    base_dir = tempfile.mkdtemp(prefix="q186_cusum_")
-    src_dir = os.path.join(base_dir, "events")
-    ckpt = os.path.join(base_dir, "ckpt")
-    os.makedirs(src_dir)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -982,25 +838,14 @@ def q186_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     state: dict[str, list] = {}
     guard = {"last_t": None}
 
-    try:
+    with _scratch("q186_cusum_") as base_dir:
         # time-sliced source files, written IN TIME ORDER (strictly
-        # increasing mtimes → the file source replays them in order)
-        lo, hi = ev.agg(F.min("t"), F.max("t")).first()
-        span = (hi - lo) + 1
-        for i in range(4):
-            a = lo + span * i // 4
-            b = lo + span * (i + 1) // 4
-            ev.filter((F.col("t") >= a) & (F.col("t") < b)).coalesce(
-                1
-            ).write.parquet(os.path.join(src_dir, f"slice_{i}"))
-
-        stream = (
-            spark.readStream.schema(
-                "event_type string, ts timestamp_ntz, event_id long,"
-                " x long, t long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(src_dir, "slice_*"))
+        # increasing mtimes → the file source replays them in order);
+        # ts replays as timestamp_ntz, the wall-clock order key
+        stream = replay_source(
+            ev.withColumn("ts", F.col("ts").cast("timestamp_ntz")),
+            os.path.join(base_dir, "events"),
+            "t",
         )
 
         def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1075,25 +920,15 @@ def q186_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n + r["n_b"],
                 ]
 
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q186: event stream did not drain")
+        _drain_batches(stream, fold_batch, base_dir, "q186")
 
-        return spark.createDataFrame(
-            [
-                (et, st[4], st[2], st[3])
-                for et, st in sorted(state.items())
-            ],
-            "event_type string, n bigint, max_s bigint, n_alerts bigint",
-        )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
+    return spark.createDataFrame(
+        [
+            (et, st[4], st[2], st[3])
+            for et, st in sorted(state.items())
+        ],
+        "event_type string, n bigint, max_s bigint, n_alerts bigint",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1140,17 +975,8 @@ def q204_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever; each micro-batch costs its own aggregate plus a merge
     join against only the bars it touches.
     """
-    import os
-    import shutil
-
-    from ..sources.readers import load_table
-
-    base_dir = tempfile.mkdtemp(prefix="q204_ohlc_")
-    src_dir = os.path.join(base_dir, "events")
-    ckpt = os.path.join(base_dir, "ckpt")
-    state: dict = {}
-
-    try:
+    with _scratch("q204_ohlc_") as base_dir:
+        state = ParquetState(base_dir, "bars")
         ev = load_table(spark, sf_dir, "events").select(
             "event_type",
             F.expr(
@@ -1162,15 +988,7 @@ def q204_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("k"),
             F.expr("cast(floor(value * 10000) as bigint)").alias("x"),
         )
-        ev.repartitionByRange(4, "k").write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema(
-                "event_type string, day long, k long, x long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+        stream = replay_source(ev, os.path.join(base_dir, "events"), "k")
 
         def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
             bars = batch_df.groupBy("event_type", "day").agg(
@@ -1182,9 +1000,8 @@ def q204_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("max(k)").alias("kc"),
                 F.expr("max_by(x, k)").alias("close"),
             )
-            prev = state.get("dir")
-            if prev is not None:
-                base = spark.read.parquet(prev)
+            base = state.read()
+            if base is not None:
                 bars = (
                     bars.alias("n")
                     .join(
@@ -1216,24 +1033,11 @@ def q204_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
                         " as close",
                     )
                 )
-            nxt = os.path.join(base_dir, f"bars_v{batch_id}")
-            bars.write.mode("overwrite").parquet(nxt)
-            old = state.get("dir")
-            state["dir"] = nxt
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
+            state.commit(bars, batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q204: event stream did not drain")
+        _drain_batches(stream, merge_batch, base_dir, "q204")
 
-        bars = spark.read.parquet(state["dir"])
+        bars = state.read()
         return (
             bars.select(
                 "event_type",
@@ -1247,8 +1051,6 @@ def q204_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type", "day")
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1304,20 +1106,14 @@ def q235_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch fold + a state-sized patch join + the dirty slices'
     re-aggregation (partition-prunable on the group key).
     """
-    import os
-    import shutil
-
     from ..operators import ivm
-    from ..sources.readers import load_table
 
-    base_dir = tempfile.mkdtemp(prefix="q235_ivm_")
-    src_dir = os.path.join(base_dir, "cdc")
-    ckpt = os.path.join(base_dir, "ckpt")
-    slots: dict = {}
     keys = ["l_returnflag", "ym"]
     sums, mms = ["qty", "price_c"], ["price_c"]
 
-    try:
+    with _scratch("q235_ivm_") as base_dir:
+        detail = ParquetState(base_dir, "detail")
+        state = ParquetState(base_dir, "state")
         l = load_table(spark, sf_dir, "lineitem").select(
             "l_returnflag",
             F.expr(
@@ -1347,76 +1143,43 @@ def q235_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # seed state + detail (version 0), then replay the CDC in
         # ~4 file-batches
-        det0 = os.path.join(base_dir, "detail_v0")
-        st0 = os.path.join(base_dir, "state_v0")
-        base.write.parquet(det0)
-        ivm.rollup_state(
-            spark.read.parquet(det0), keys, sums, mms
-        ).write.parquet(st0)
-        slots["detail"], slots["state"] = det0, st0
-        cdc.repartitionByRange(4, "l_orderkey").write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema(
-                "l_returnflag string, ym long, qty long,"
-                " price_c long, l_orderkey long, op string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+        detail.commit(base, 0)
+        state.commit(ivm.rollup_state(detail.read(), keys, sums, mms), 0)
+        stream = replay_source(
+            cdc, os.path.join(base_dir, "cdc"), "l_orderkey"
         )
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            detail = spark.read.parquet(slots["detail"])
-            state = spark.read.parquet(slots["state"])
+            prev_state = state.read()
             batch_df = batch_df.localCheckpoint(eager=True)
             dels = batch_df.where(
                 f"{ivm.OP_COL} = 'D'"
             ).select("l_orderkey").distinct()
-            detail_next = detail.join(
+            detail_next = detail.read().join(
                 F.broadcast(dels), "l_orderkey", "left_anti"
             ).unionByName(
                 batch_df.where(f"{ivm.OP_COL} = 'I'").drop(
                     ivm.OP_COL
                 )
             )
-            det_dir = os.path.join(
-                base_dir, f"detail_v{batch_id + 1}"
-            )
-            detail_next.write.mode("overwrite").parquet(det_dir)
+            detail.commit(detail_next, batch_id + 1)
             new_state = ivm.maintain_rollup(
-                state,
+                prev_state,
                 batch_df,
-                spark.read.parquet(det_dir),
+                detail.read(),
                 keys,
                 sums,
                 mms,
             )
-            st_dir = os.path.join(
-                base_dir, f"state_v{batch_id + 1}"
-            )
-            new_state.write.mode("overwrite").parquet(st_dir)
-            for slot, nxt in (("detail", det_dir), ("state", st_dir)):
-                old = slots[slot]
-                slots[slot] = nxt
-                shutil.rmtree(old, ignore_errors=True)
+            state.commit(new_state, batch_id + 1)
 
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q235: CDC stream did not drain")
+        _drain_batches(stream, apply_batch, base_dir, "q235")
 
         return (
-            spark.read.parquet(slots["state"])
+            state.read()
             .orderBy(*keys)
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1452,68 +1215,37 @@ def q241_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape behind every streaming leaderboard. Final state pinned to
     the single-pass batch oracle.
     """
-    import os
-    import shutil
-
-    from ..sources.readers import load_table
-
-    base_dir = tempfile.mkdtemp(prefix="q241_topk_")
-    src_dir = os.path.join(base_dir, "events")
-    ckpt = os.path.join(base_dir, "ckpt")
-    slots: dict = {}
-
-    try:
+    with _scratch("q241_topk_") as base_dir:
+        state = ParquetState(base_dir, "topk")
         ev = load_table(spark, sf_dir, "events").select(
             F.expr("cast(floor(value * 10000) as bigint)").alias("x"),
             "event_id",
             "event_type",
         )
-        ev.repartitionByRange(4, "event_id").write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema(
-                "x long, event_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+        stream = replay_source(
+            ev, os.path.join(base_dir, "events"), "event_id"
         )
 
         def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
             top = batch_df.orderBy(
                 F.desc("x"), "event_id"
             ).limit(_Q241_K)
-            prev = slots.get("dir")
+            prev = state.read()
             if prev is not None:
                 top = (
-                    spark.read.parquet(prev)
-                    .unionByName(top)
+                    prev.unionByName(top)
                     .orderBy(F.desc("x"), "event_id")
                     .limit(_Q241_K)
                 )
-            nxt = os.path.join(base_dir, f"topk_v{batch_id}")
-            top.write.mode("overwrite").parquet(nxt)
-            old = slots.get("dir")
-            slots["dir"] = nxt
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
+            state.commit(top, batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q241: event stream did not drain")
+        _drain_batches(stream, merge_batch, base_dir, "q241")
 
         return (
-            spark.read.parquet(slots["dir"])
+            state.read()
             .orderBy(F.desc("x"), "event_id")
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1522,12 +1254,13 @@ def q241_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_events_chronological(
+def _replay_events_chronological(
     spark: SparkSession, sf_dir: str, base_dir: str, sentinel_hours: int
-) -> str:
+) -> DataFrame:
     """Stage the events table as FOUR time-range parquet files with
     strictly ascending modification times plus a far-future sentinel
-    file, for multi-micro-batch streaming replays (q250/q252).
+    file, and return the one-file-per-trigger replay stream over them,
+    for multi-micro-batch streaming replays (q250/q252).
 
     The file source drains oldest-mtime first, so stamping mtimes in
     range order replays the corpus chronologically — which is what
@@ -1540,21 +1273,13 @@ def _stage_events_chronological(
     filter the type out (or let their event-type predicates drop it)
     AFTER their ``withWatermark`` so it still advances event time.
     """
-    import glob
-    import os
-
-    from ..sources.readers import load_table
-
     src_dir = os.path.join(base_dir, "events_by_time")
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
-    ev.repartitionByRange(4, "ts").write.parquet(src_dir)
-    # repartitionByRange writes ascending ranges in part-file order
-    parts = sorted(glob.glob(os.path.join(src_dir, "part-*")))
-    base_t = os.path.getmtime(parts[0])
-    for i, f in enumerate(parts):
-        os.utime(f, (base_t + i, base_t + i))
+    stream = replay_source(ev, src_dir, "ts")
+    parts = set(glob.glob(os.path.join(src_dir, "part-*")))
+    sentinel_t = max(map(os.path.getmtime, parts)) + 100
     ev.groupBy().agg(
         F.lit(-1).cast("long").alias("user_id"),
         (
@@ -1562,9 +1287,9 @@ def _stage_events_chronological(
         ).alias("ts"),
         F.lit("sentinel").alias("event_type"),
     ).coalesce(1).write.mode("append").parquet(src_dir)
-    for f in set(glob.glob(os.path.join(src_dir, "part-*"))) - set(parts):
-        os.utime(f, (base_t + 100, base_t + 100))
-    return src_dir
+    for f in set(glob.glob(os.path.join(src_dir, "part-*"))) - parts:
+        os.utime(f, (sentinel_t, sentinel_t))
+    return stream
 
 
 _Q250_ORACLE = """
@@ -1659,22 +1384,11 @@ def q250_streaming_session_funnel(
     events) and reduces to 3 rows — at 100 TB the events scan
     happens exactly once, in the stream.
     """
-    import shutil
-
-    base_dir = tempfile.mkdtemp(prefix="q250_funnel_")
-    try:
+    with _scratch("q250_funnel_") as base_dir:
         # 30 h sentinel: > the 24 h session gap + the 1 h watermark
         # delay, so the final watermark passes every real session end
-        src_dir = _stage_events_chronological(
+        stream = _replay_events_chronological(
             spark, sf_dir, base_dir, sentinel_hours=30
-        )
-
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts timestamp, event_type string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
         )
         sessions = (
             stream.withWatermark("ts", "1 hour")
@@ -1694,7 +1408,7 @@ def q250_streaming_session_funnel(
             )
             .select("user_id", "first_view", "first_click", "first_purchase")
         )
-        sink = _drain_to_memory(sessions, "q250", "append")
+        sink = drain_to_memory(sessions, "q250", "append")
 
         s1 = sink.filter(F.col("first_view").isNotNull())
         s2 = s1.filter(F.col("first_click") > F.col("first_view"))
@@ -1718,8 +1432,6 @@ def q250_streaming_session_funnel(
             .orderBy("stage")
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1816,20 +1528,13 @@ def q251_streaming_bloom_gate(
     is bucketed on the key and TTL-compacted, exactly like q115's
     state discipline.
     """
-    import os
-    import shutil
-
     from .. import caching
     from ..operators import sketch
-    from ..sources.readers import load_table
     from .olap_queries import BLOOM_K, BLOOM_M
 
-    base_dir = tempfile.mkdtemp(prefix="q251_gate_")
-    src_dir = os.path.join(base_dir, "arrivals")
-    ckpt = os.path.join(base_dir, "ckpt")
-    admit_dir = os.path.join(base_dir, "admitted")
-    counts_dir = os.path.join(base_dir, "arrival_counts")
-    try:
+    with _scratch("q251_gate_") as base_dir:
+        admit_dir = os.path.join(base_dir, "admitted")
+        counts_dir = os.path.join(base_dir, "arrival_counts")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type"
         )
@@ -1878,15 +1583,9 @@ def q251_streaming_bloom_gate(
         c2 = ev.withColumn(
             "shard", (F.col("event_id") % 2 + 2).cast("int")
         )
-        c1.unionAll(c2).repartitionByRange(4, "shard").select(
-            "event_id", "event_type"
-        ).write.parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema("event_id long, event_type string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+        stream = replay_source(
+            c1.unionAll(c2), os.path.join(base_dir, "arrivals"), "shard"
+        ).drop("shard")
 
         state = {"has_admitted": False}
 
@@ -1927,15 +1626,7 @@ def q251_streaming_bloom_gate(
             finally:
                 raw.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q251: arrival stream did not drain")
+        _drain_batches(stream, gate_batch, base_dir, "q251")
 
         admitted = spark.read.parquet(admit_dir)
         per_type = admitted.groupBy("event_type").agg(
@@ -1972,8 +1663,6 @@ def q251_streaming_bloom_gate(
             .orderBy("event_type")
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2030,34 +1719,19 @@ def q252_streaming_attribution_rollup(
     output is days × 16 bytes — the 100 TB shape where the raw pair
     stream never lands anywhere, only its aggregate does.
     """
-    import shutil
-
-    base_dir = tempfile.mkdtemp(prefix="q252_attr_")
-    try:
-        src_dir = _stage_events_chronological(
+    with _scratch("q252_attr_") as base_dir:
+        # watermark BEFORE the type filter: the sentinel must
+        # advance event time, then drop out of the join inputs
+        events = _replay_events_chronological(
             spark, sf_dir, base_dir, sentinel_hours=50
-        )
-
-        def side() -> DataFrame:
-            s = (
-                spark.readStream.schema(
-                    "user_id long, ts timestamp, event_type string"
-                )
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src_dir)
-            )
-            # watermark BEFORE the type filter: the sentinel must
-            # advance event time, then drop out of the join inputs
-            return s.withWatermark("ts", "1 hour")
+        ).withWatermark("ts", "1 hour")
 
         views = (
-            side()
-            .filter(F.col("event_type") == "view")
+            events.filter(F.col("event_type") == "view")
             .select("user_id", F.col("ts").alias("v_ts"))
         )
         purchases = (
-            side()
-            .filter(F.col("event_type") == "purchase")
+            events.filter(F.col("event_type") == "purchase")
             .select(
                 F.col("user_id").alias("p_user"),
                 F.col("ts").alias("p_ts"),
@@ -2088,34 +1762,45 @@ def q252_streaming_attribution_rollup(
             )
         )
         return (
-            _drain_to_memory(rollup, "q252", "append")
+            drain_to_memory(rollup, "q252", "append")
             .orderBy("day_start")
             .localCheckpoint(eager=True)  # materialize before cleanup
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 #: live checkpoint dir per state-reader query tag: the returned
 #: DataFrame reads the checkpoint LAZILY (the driver collects after
 #: the query function returns), so the dir must outlive the call —
 #: each invocation deletes the PREVIOUS one, keeping at most one per
-#: tag per session, and an atexit sweep removes whatever is still
-#: registered when the driver process ends (ADVICE r11 #4: without
-#: it a long-lived session leaked one RocksDB checkpoint dir per
-#: tag under /tmp at exit).
-_STATE_CKPTS: dict[str, str] = {}
+#: tag per session, and the ``TemporaryDirectory`` finalizer removes
+#: whatever is still registered when the driver process ends
+#: (ADVICE r11 #4: without it a long-lived session leaked one RocksDB
+#: checkpoint dir per tag under /tmp at exit).
+_STATE_CKPTS: dict[str, tempfile.TemporaryDirectory] = {}
 
 
-def _sweep_state_ckpts() -> None:
-    import shutil
-
-    while _STATE_CKPTS:
-        _, path = _STATE_CKPTS.popitem()
-        shutil.rmtree(path, ignore_errors=True)
-
-
-atexit.register(_sweep_state_ckpts)
+def _drain_rocksdb_state(stream: DataFrame, tag: str, output_mode: str) -> str:
+    """Drain ``stream`` into a discarded noop sink under the RocksDB
+    state store provider and return its checkpoint dir — the STATE is
+    the result. The session's state conf is restored afterwards; the
+    checkpoint stays registered in ``_STATE_CKPTS`` until the next
+    call for ``tag`` or process exit."""
+    prev = _STATE_CKPTS.pop(tag, None)
+    if prev is not None:
+        prev.cleanup()
+    ckpt = _STATE_CKPTS[tag] = _scratch(f"{tag}_state_")
+    spark = stream.sparkSession
+    previous = enable_rocksdb_state(spark)
+    try:
+        drain(
+            stream.writeStream.format("noop")
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt.name),
+            tag,
+        )
+    finally:
+        restore_state_conf(spark, previous)
+    return ckpt.name
 
 
 @query(
@@ -2154,21 +1839,6 @@ def q262_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at production cardinalities the read distributes like any
     parquet scan, no driver funnel.
     """
-    import shutil
-
-    from ..functions.scalar import ROUND_TO
-    from ..streaming.statestore import (
-        enable_rocksdb_state,
-        read_state,
-        restore_state_conf,
-    )
-
-    prev_dir = _STATE_CKPTS.pop("q262", None)
-    if prev_dir is not None:
-        shutil.rmtree(prev_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="q262_state_")
-    _STATE_CKPTS["q262"] = ckpt
-
     stream = (
         read_events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -2177,22 +1847,7 @@ def q262_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value").alias("sum_value"),
         )
     )
-    previous = enable_rocksdb_state(spark)
-    try:
-        q = (
-            stream.writeStream.format("noop")  # sink discarded: the
-            .outputMode("update")              # STATE is the result
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "q262: stream did not drain within 300s"
-            )
-    finally:
-        restore_state_conf(spark, previous)
+    ckpt = _drain_rocksdb_state(stream, "q262", "update")
 
     # value struct = the aggregation's physical buffers: count
     # (long), sum (decimal(38,6) — dec_sum's pre-rounding buffer)
@@ -2274,21 +1929,6 @@ def q263_session_state_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's complete-mode shape exists so the oracle can check EVERY
     session, not just the watermark survivors.)
     """
-    import shutil
-
-    from ..functions.scalar import ROUND_TO
-    from ..streaming.statestore import (
-        enable_rocksdb_state,
-        read_state,
-        restore_state_conf,
-    )
-
-    prev_dir = _STATE_CKPTS.pop("q263", None)
-    if prev_dir is not None:
-        shutil.rmtree(prev_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="q263_state_")
-    _STATE_CKPTS["q263"] = ckpt
-
     stream = (
         read_events_stream(spark, sf_dir)
         .groupBy(
@@ -2301,22 +1941,7 @@ def q263_session_state_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value").alias("sum_value"),
         )
     )
-    previous = enable_rocksdb_state(spark)
-    try:
-        q = (
-            stream.writeStream.format("noop")  # sink discarded: the
-            .outputMode("complete")            # STATE is the result
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "q263: stream did not drain within 300s"
-            )
-    finally:
-        restore_state_conf(spark, previous)
+    ckpt = _drain_rocksdb_state(stream, "q263", "complete")
 
     # value struct = session_window + the aggregation's physical
     # buffers: min/max (timestamps), count (long), sum (decimal)

@@ -106,14 +106,13 @@ def write_stream_parquet(
     path: str,
     checkpoint: str,
     partition_by: list[str] | None = None,
-    available_now: bool = True,
     query_name: str | None = None,
 ):
-    """Checkpointed parquet sink. ``availableNow`` drains the backlog
-    then stops — the batch-compatible trigger used in tests and
-    backfills; drop it for a continuous 24/7 ingest. ``query_name``
-    labels the stream for progress events
-    (``ops.observe.StreamingMetricsRecorder``)."""
+    """Checkpointed parquet sink, started with the ``availableNow``
+    trigger: it drains the backlog then stops — the batch-compatible
+    trigger used in tests and backfills. Returns the started query;
+    the caller awaits it. ``query_name`` labels the stream for
+    progress events (``ops.observe.StreamingMetricsRecorder``)."""
     writer = (
         df.writeStream.format("parquet")
         .option("path", path)
@@ -124,9 +123,7 @@ def write_stream_parquet(
         writer = writer.queryName(query_name)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def write_stream_idempotent(
@@ -137,7 +134,6 @@ def write_stream_idempotent(
     checkpoint: str,
     tolerance: str = TOLERANCE,
     partition_by: list | None = None,
-    available_now: bool = True,
 ):
     """``foreachBatch`` sink with ROW-level idempotence: each
     micro-batch is deduped within itself on the unique key, then
@@ -199,12 +195,12 @@ def write_stream_idempotent(
             writer = writer.partitionBy(*list(partition_by))
         writer.parquet(path)
 
-    writer = df.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    return (
+        df.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def enrich_stream(

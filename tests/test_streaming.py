@@ -1,12 +1,14 @@
 """Structured Streaming tests: file-source ingest with watermark
 dedup, tumbling-window rollup, and the custom stateful gap operator —
 all driven with ``availableNow`` triggers over tmp_path file streams
-so they run exactly like batch jobs.
+so they run exactly like batch jobs — plus the drain module
+(``streaming/drain.py``) they run through.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +20,11 @@ from building_energy_data_pipeline_spark.streaming import (
     windowed_rollup,
     write_stream_parquet,
 )
+from building_energy_data_pipeline_spark.streaming.drain import (
+    ParquetState,
+    drain,
+    replay_source,
+)
 
 T0 = dt.datetime(2016, 1, 1, 0, 0, 0)
 
@@ -28,8 +35,12 @@ def write_batch(spark, path, rows):
     ).write.mode("append").parquet(path)
 
 
-def drain(query):
-    query.awaitTermination(120)
+def wait_drained(query, timeout_s=120):
+    """Await a query the ingest writers already started; a hung drain
+    raises here instead of surfacing later as a wrong-data assertion."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(f"stream did not drain within {timeout_s}s")
 
 
 @pytest.fixture()
@@ -52,7 +63,7 @@ class TestStreamingIngest:
     def test_dedup_and_sink(self, spark, tmp_path, src):
         out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
         stream = dedup_stream(read_meter_stream(spark, src))
-        drain(write_stream_parquet(stream, out, ckpt, partition_by=["meter"]))
+        wait_drained(write_stream_parquet(stream, out, ckpt, partition_by=["meter"]))
         stored = spark.read.parquet(out)
         assert stored.count() == 3  # dup collapsed by the key
         assert set(stored.columns) >= {"timestamp", "building_id", "meter_reading"}
@@ -62,14 +73,14 @@ class TestStreamingIngest:
         # seen files are not reprocessed (checkpointed file log)
         out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
         stream = dedup_stream(read_meter_stream(spark, src))
-        drain(write_stream_parquet(stream, out, ckpt))
+        wait_drained(write_stream_parquet(stream, out, ckpt))
         assert spark.read.parquet(out).count() == 3
 
         write_batch(
             spark, src, [(T0 + dt.timedelta(hours=2), "b3", "gas", 4.0)]
         )
         stream2 = dedup_stream(read_meter_stream(spark, src))
-        drain(write_stream_parquet(stream2, out, ckpt))
+        wait_drained(write_stream_parquet(stream2, out, ckpt))
         assert spark.read.parquet(out).count() == 4  # +1, not re-ingested
 
     def test_windowed_rollup(self, spark, tmp_path):
@@ -90,7 +101,7 @@ class TestStreamingIngest:
         )
         out, ckpt = str(tmp_path / "roll"), str(tmp_path / "ckpt2")
         rolled = windowed_rollup(read_meter_stream(spark, p))
-        drain(write_stream_parquet(rolled, out, ckpt))
+        wait_drained(write_stream_parquet(rolled, out, ckpt))
         got = {
             (r["window_start"], r["building_id"]): (
                 r["n_readings"],
@@ -110,15 +121,13 @@ class TestStatefulGap:
         # (parquet is append-only) → memory sink for the assertion
         ckpt = str(tmp_path / "ckpt3")
         gaps = meter_gap_stats(read_meter_stream(spark, src))
-        q = (
+        drain(
             gaps.writeStream.format("memory")
             .queryName("gap_stats")
             .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("update"),
+            "gap_stats",
         )
-        drain(q)
         got = {
             (r["building_id"], r["meter"]): (
                 r["n_readings"],
@@ -141,7 +150,7 @@ class TestStreamingIdempotentSink:
 
         # first drain: gate passes (empty warehouse), dup row deduped
         stream = dedup_stream(read_meter_stream(spark, src))
-        drain(
+        wait_drained(
             write_stream_idempotent(
                 stream, wh, "raw", keys, str(tmp_path / "ckpt1")
             )
@@ -154,7 +163,7 @@ class TestStreamingIdempotentSink:
         src2 = str(tmp_path / "in2")
         spark.read.parquet(src).write.parquet(src2)
         stream2 = dedup_stream(read_meter_stream(spark, src2))
-        drain(
+        wait_drained(
             write_stream_idempotent(
                 stream2, wh, "raw", keys, str(tmp_path / "ckpt2")
             )
@@ -174,7 +183,7 @@ class TestStreamingIdempotentSink:
             ],
         )
         stream3 = dedup_stream(read_meter_stream(spark, src3))
-        drain(
+        wait_drained(
             write_stream_idempotent(
                 stream3, wh, "raw", keys, str(tmp_path / "ckpt3")
             )
@@ -196,7 +205,7 @@ class TestStreamingIdempotentSink:
             [(T0 + dt.timedelta(days=1), "b9", "gas", 9.0)],
         )
         stream4 = dedup_stream(read_meter_stream(spark, src4))
-        drain(
+        wait_drained(
             write_stream_idempotent(
                 stream4, wh, "raw", keys, str(tmp_path / "ckpt4")
             )
@@ -270,7 +279,7 @@ class TestStreamingMetricsRecorder:
         try:
             out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
             stream = dedup_stream(read_meter_stream(spark, src))
-            drain(
+            wait_drained(
                 write_stream_parquet(
                     stream, out, ckpt, query_name="metrics_probe"
                 )
@@ -311,14 +320,12 @@ class TestStreamStaticEnrich:
         )
         sink = str(tmp_path / "enriched")
         ckpt = str(tmp_path / "ckpt_enrich")
-        q = (
+        drain(
             stream.writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "enrich",
         )
-        q.awaitTermination(120)
         got = sorted(
             (r.building_id, r.meter, r.site)
             for r in spark.read.parquet(sink).collect()
@@ -368,14 +375,12 @@ class TestStreamStaticEnrich:
             ckpt = str(tmp_path / "ckpt_enrich2")
 
             def run_once():
-                q = (
+                drain(
                     stream.writeStream.format("parquet")
                     .option("path", sink)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
+                    .option("checkpointLocation", ckpt),
+                    "scd_enrich",
                 )
-                q.awaitTermination(120)
 
             run_once()
             # rewrite the dim (fresh part files), refresh, append a
@@ -621,14 +626,12 @@ class TestStateDataSource:
         ck = str(tmp_path / "ck")
         previous = enable_rocksdb_state(spark)
         try:
-            q = (
+            drain(
                 joined.writeStream.format("noop")
                 .outputMode("append")
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
+                .option("checkpointLocation", ck),
+                "join_state",
             )
-            assert q.awaitTermination(300)
         finally:
             restore_state_conf(spark, previous)
 
@@ -678,3 +681,67 @@ class TestStateDataSource:
                 r["key"][0]: r["value"][0] for r in raw if r["value"][0]
             }
             assert raw_counts == dict(counts)
+
+
+class TestDrainModule:
+    """``streaming/drain.py``: the availableNow drain, the versioned
+    parquet fold state and the range-ordered replay source."""
+
+    def test_drain_timeout_raises_and_stops_query(self, spark, tmp_path, src):
+        import time
+
+        def slow(batch_df, batch_id):
+            time.sleep(5)
+
+        writer = (
+            read_meter_stream(spark, src)
+            .writeStream.foreachBatch(slow)
+            .queryName("slow_drain")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+        )
+        with pytest.raises(TimeoutError, match="slow_drain"):
+            drain(writer, "slow_drain", timeout_s=1)
+        assert not [q for q in spark.streams.active if q.name == "slow_drain"]
+
+    def test_parquet_state_keeps_newest_version_only(self, spark, tmp_path):
+        state = ParquetState(str(tmp_path), "s")
+        assert state.read() is None
+        for v in range(3):
+            state.commit(spark.range(v + 1), v)
+        assert os.listdir(tmp_path) == ["s_v2"]
+        assert state.read().count() == 3
+
+    def test_failed_commit_leaves_previous_state_readable(
+        self, spark, tmp_path
+    ):
+        state = ParquetState(str(tmp_path), "s")
+        state.commit(spark.range(3), 0)
+        bad = spark.range(5).withColumn("x", F.expr("raise_error('boom')"))
+        with pytest.raises(Exception, match="boom"):
+            state.commit(bad, 1)
+        assert state.read().count() == 3
+        assert "s_v0" in os.listdir(tmp_path)
+
+    def test_replay_source_replays_key_ranges_in_order(self, spark, tmp_path):
+        ranges = []
+
+        def record(batch_df, batch_id):
+            row = batch_df.agg(F.min("id"), F.max("id")).first()
+            if row[0] is not None:
+                ranges.append(tuple(row))
+
+        df = spark.range(400).selectExpr("id", "id % 7 AS k")
+        stream = replay_source(df, str(tmp_path / "src"), "id")
+        assert [(f.name, f.dataType) for f in stream.schema] == [
+            (f.name, f.dataType) for f in df.schema
+        ]
+        drain(
+            stream.writeStream.foreachBatch(record).option(
+                "checkpointLocation", str(tmp_path / "ck")
+            ),
+            "replay",
+        )
+        # one range file per trigger, replayed in key order
+        assert len(ranges) == 4
+        assert ranges == sorted(ranges)
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
