@@ -318,24 +318,23 @@ def main() -> None:
             "metric",
             "val",
         )
-        # split timing (r14, VERDICT r13 #8 — additions-only): the
-        # write-inclusive number is the contract entry and stays
-        # unchanged below; this extra noop-sink timing isolates the
-        # melt COMPUTE so the parquet-commit disk mood (observed
-        # 1.1→4.8 s swings on identical runs) stops polluting the
-        # only write-inclusive headline entry's interpretation.
-        best_melt = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            melted.write.format("noop").mode("overwrite").save()
-            best_melt = min(best_melt, time.perf_counter() - t0)
-        timings["ingest_melt_only"] = round(best_melt, 4)
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
             melted.write.mode("overwrite").parquet(out)
             best = min(best, time.perf_counter() - t0)
         timings["ingest_melt_write"] = round(best, 4)
+        # split timing: the noop-sink run isolates the melt COMPUTE so
+        # the parquet-commit disk mood (observed 1.1→4.8 s swings on
+        # identical runs) stops polluting the write-inclusive entry's
+        # interpretation. It runs AFTER the write loop, so the
+        # write-inclusive entry keeps the warm-up it always had.
+        best_melt = float("inf")
+        for _ in range(2):
+            t0 = time.perf_counter()
+            melted.write.format("noop").mode("overwrite").save()
+            best_melt = min(best_melt, time.perf_counter() - t0)
+        timings["ingest_melt_only"] = round(best_melt, 4)
     except Exception as exc:  # noqa: BLE001
         timings["ingest_melt_write"] = -1.0
         errors["ingest_melt_write"] = f"{type(exc).__name__}: {exc}"[:500]

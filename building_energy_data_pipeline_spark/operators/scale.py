@@ -14,12 +14,18 @@ when the data is 1000× bigger than any single node:
   even tasks. (AQE's skew-join split handles *sort-merge* skew
   automatically; salting is the explicit form that also works for
   aggregations and pre-AQE plans.)
+
+Two size-conditioned devices sit beside them: ``spread_scan`` fans a
+narrow scan out across the cores only when it is narrow, and
+``driver_rows`` / ``local_frame`` keep data that fits under the
+session's broadcast bar on the driver.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_bucketed(
@@ -93,6 +99,60 @@ def spread_scan(
     if by:
         return df.repartition(cores, *[F.col(c) for c in by])
     return df.repartition(cores)
+
+
+def driver_rows(df: DataFrame) -> int:
+    """How many rows of ``df`` may be collected to the driver: 0 when
+    its Catalyst size estimate (``optimizedPlan().stats().sizeInBytes``)
+    is over the session's broadcast bar,
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 = never), else the
+    bar divided by Catalyst's own per-row size (8 bytes of row header
+    plus each column type's default size).
+
+    The sibling of :func:`spread_scan`'s partition probe: the bar the
+    planner already uses to ship a join side to every executor is the
+    bar for pulling a frame to the driver, so the choice adds no knob
+    and moves with the session's setting. Plans only — no job. An
+    estimate can be low (a filter the optimizer cannot size), so the
+    caller bounds its collect with the returned cap
+    (``df.limit(cap + 1)``) and falls back when the cap is hit.
+    """
+    jdf = df._jdf  # noqa: SLF001
+    conf = jdf.sparkSession().sessionState().conf()
+    bar = conf.autoBroadcastJoinThreshold()
+    stats = jdf.queryExecution().optimizedPlan().stats()
+    if bar < 0 or int(stats.sizeInBytes()) > bar:
+        return 0
+    return bar // (8 + jdf.schema().defaultSize())
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """A driver-built constant table as a ``LocalRelation``.
+
+    ``createDataFrame(<list>)`` parallelizes the rows into an RDD:
+    the frame is a ``LogicalRDD`` and every action on it pays a job
+    to read them back (a 31-row noop write: 0.355 s against 0.066 s,
+    4 cores). Built through Arrow, the rows travel to the JVM once
+    and land in a ``LocalRelation``: the optimizer folds projections
+    and filters over it on the driver, sizes it exactly for a
+    broadcast, and a collect reads it without a job. ``schema`` (a
+    ``StructType`` or DDL string) is required — no inference pass
+    over the rows, and an empty ``rows`` keeps its column types.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)  # noqa: SLF001
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def salted_join(
@@ -258,8 +318,8 @@ def global_row_index(
     for row in sorted(counts, key=lambda r: r["__pid"]):
         offsets[row["__pid"]] = acc
         acc += row["__cnt"]
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
+    off_df = local_frame(
+        spark, list(offsets.items()), "__pid int, __off long"
     )
 
     w = Window.partitionBy("__pid").orderBy(*cols)
@@ -311,8 +371,8 @@ def global_running_sum(
     for row in sorted(totals, key=lambda r: r["__pid"]):
         offsets[row["__pid"]] = acc
         acc += row["__tot"] or 0
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
+    off_df = local_frame(
+        spark, list(offsets.items()), "__pid int, __off long"
     )
 
     w = (

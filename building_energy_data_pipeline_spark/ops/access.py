@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import scale
+
 #: privilege vocabulary (reference surface: information_schema
 #: privilege_type values the audit query aggregates)
 PRIVILEGES = ("SELECT", "INSERT", "UPDATE", "DELETE", "ALL")
@@ -197,7 +199,8 @@ class AccessControl:
                     privs,
                 )
             )
-        return spark.createDataFrame(
+        return scale.local_frame(
+            spark,
             rows,
             "rolname string, rolsuper boolean, rolcanlogin boolean,"
             " memberof array<string>, privileges array<string>",
@@ -214,8 +217,8 @@ class AccessControl:
             for (t, role), ps in sorted(self.grants.items())
             if t == table
         ]
-        return spark.createDataFrame(
-            rows or [], "grantee string, privileges string"
+        return scale.local_frame(
+            spark, rows, "grantee string, privileges string"
         )
 
     # -- persistence --------------------------------------------------------

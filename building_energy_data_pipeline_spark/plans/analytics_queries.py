@@ -1158,6 +1158,7 @@ def q179_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized exists except the {_KCORE_ROUNDS + 1}-row report.
     """
     from .. import caching
+    from ..operators import scale
 
     co = (
         load_table(spark, sf_dir, "lineitem")
@@ -1200,8 +1201,8 @@ def q179_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("u", "v"),
         )
         spark_rows.append((r, keep.count(), cur.count()))
-    return spark.createDataFrame(
-        spark_rows, "round bigint, n_nodes bigint, n_edges bigint"
+    return scale.local_frame(
+        spark, spark_rows, "round bigint, n_nodes bigint, n_edges bigint"
     )
 
 
@@ -5407,6 +5408,8 @@ def q244_shapley_attribution(
     ≤16 mask rows, and everything after — the coalition joins, the
     32 terms, the folds — is constant-sized.
     """
+    from ..operators import scale
+
     case = " ".join(
         f"WHEN '{c}' THEN {b}" for c, b in sorted(_SHAP_BITS.items())
     )
@@ -5433,8 +5436,8 @@ def q244_shapley_attribution(
         F.count("*").alias("n"),
         F.expr("cast(sum(conv) as bigint)").alias("n_conv"),
     )
-    terms = spark.createDataFrame(
-        _shap_terms(), "ch string, s long, su long, w24 long"
+    terms = scale.local_frame(
+        spark, _shap_terms(), "ch string, s long, su long, w24 long"
     )
     ms = m.selectExpr("mask as s", "n as n_s", "n_conv as c_s")
     mu = m.selectExpr("mask as su", "n as n_su", "n_conv as c_su")

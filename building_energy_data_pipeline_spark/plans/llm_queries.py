@@ -611,23 +611,27 @@ def _q118_oracle(iters: int = PR_ITERS) -> str:
 @query("q118_pagerank_train", headline=True, oracle=_q118_oracle())
 def q118_pagerank_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END PageRank loop, oracle-checked: run
-    ``operators/graph.pagerank`` — the actual driver-side power
-    iteration with per-round localCheckpoints, pre-normalized edge
-    probabilities, and dangling-mass-discard semantics — over the
-    corpus bigram graph (q109's edges) for a FIXED budget of
-    {PR_ITERS} rounds (``tol=0.0``, no early stop). The DuckDB twin
-    unrolls the same rounds as CTEs, so the LOOP's output — not just
-    one step (q109) — is hash-pinned. Unlike q109 (in-edge tokens
-    only), the loop covers the FULL node set: source-only tokens
-    carry the base rank (1-d)/N.
+    ``operators/graph.pagerank`` — the power iteration with
+    pre-normalized edge probabilities and dangling-mass-discard
+    semantics — over the corpus bigram graph (q109's edges) for a
+    FIXED budget of {PR_ITERS} rounds (``tol=0.0``, no early stop).
+    The DuckDB twin unrolls the same rounds as CTEs, so the LOOP's
+    output — not just one step (q109) — is hash-pinned. Unlike q109
+    (in-edge tokens only), the loop covers the FULL node set:
+    source-only tokens carry the base rank (1-d)/N.
 
     Determinism: edge weights are integer counts (double out-weight
     sums exact); each round's in-edge sum goes through DECIMAL(38,18)
     rounded to 12 — order-independent on both engines.
 
-    Scale: per-round cost is O(|E|) over the compact edge table
-    (corpus bytes touched once, in the edge build); rank/node tables
-    are vocab-sized.
+    Scale: the edge build is the corpus-sized work (corpus bytes
+    touched once). The edge table is vocab-sized (31 tokens, ≤ 961
+    edges at every sf; Catalyst estimates ~400 KB at sf0.1), under
+    the session's broadcast bar, so ``pagerank`` collects it once and
+    runs the rounds on the driver: the build runs 4 jobs at sf0.1
+    (the edge aggregate and the collect) instead of 22. With the bar off
+    (``autoBroadcastJoinThreshold=-1``) or a graph above it, the same
+    rounds run in Spark, O(|E|) per round, with identical output.
     """
     from ..operators import graph
 
@@ -2523,7 +2527,8 @@ def q166_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     two ids + a label, votes are a map-side-combined count, and the
     per-doc argmax window partitions by doc_id (vote lists are
     ≤ neighbors, never corpus-sized). Further rounds iterate the
-    same step with q118's localCheckpoint loop pattern.
+    same step with the localCheckpoint loop pattern of
+    ``graph.pagerank``'s Spark path.
     """
     from ..schema.sampling import hash_bucket
 

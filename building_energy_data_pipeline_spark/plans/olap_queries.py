@@ -17,6 +17,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
+from ..operators import scale
 from ..operators.rangejoin import point_in_interval_join
 from ..sources.readers import load_table
 from .registry import query
@@ -149,7 +150,7 @@ def q48_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the bin key shuffles/broadcasts like any equi-join.
     """
     part = load_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(_BANDS, ["band", "lo", "hi"])
+    bands = scale.local_frame(spark, _BANDS, "band string, lo double, hi double")
     joined = point_in_interval_join(
         part.select("p_partkey", "p_retailprice"),
         "p_retailprice",

@@ -528,7 +528,7 @@ def q94_footer_rowcounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("customer", "events", "lineitem", "orders"):
         info = get_parquet_info(os.path.join(sf_dir, f"{t}.parquet"))
         rows.append((t, int(info["num_rows"])))
-    return spark.createDataFrame(rows, "table_name string, n_rows bigint")
+    return scale.local_frame(spark, rows, "table_name string, n_rows bigint")
 
 
 #: per-source keep-rate in basis points, derived from the numeric

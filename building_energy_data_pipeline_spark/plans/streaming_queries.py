@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.scalar import ROUND_TO, dec_sum, dec_sum_sql
+from ..operators import scale
 from ..sources.readers import load_table, read_events_stream
 from ..streaming.drain import (
     ParquetState,
@@ -431,8 +432,8 @@ def q115_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             base = state.read()
             if base is None:
-                base = batch_df.sparkSession.createDataFrame(
-                    [], batch_df.schema
+                base = scale.local_frame(
+                    batch_df.sparkSession, [], batch_df.schema
                 )
             merged = merge_upsert(
                 base, batch_df, ["user_id"], "version"
@@ -864,7 +865,8 @@ def q186_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             guard["last_t"] = rows_t["hi"]
 
-            seed = spark.createDataFrame(
+            seed = scale.local_frame(
+                spark,
                 [
                     (et, st[0], st[1])
                     for et, st in state.items()
@@ -922,7 +924,8 @@ def q186_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         _drain_batches(stream, fold_batch, base_dir, "q186")
 
-    return spark.createDataFrame(
+    return scale.local_frame(
+        spark,
         [
             (et, st[4], st[2], st[3])
             for et, st in sorted(state.items())

@@ -137,6 +137,10 @@ def _normalize_ts(df: DataFrame, path: str | None = None) -> DataFrame:
     return df
 
 
+def _reraise(err: OSError) -> None:
+    raise err
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Plain ``spark.read.parquet`` — column
     pruning and predicate pushdown reach the scan automatically.
@@ -167,13 +171,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if stat.S_ISDIR(st.st_mode):
             # a directory's own (mtime, size) misses an in-place
             # rewrite of a part file (no create/rename/delete touches
-            # the dir entry), so fold the child listing's stats into
-            # the key (ADVICE r13). Spark's own writers always write
+            # the dir entry), so fold every file's stats into the key,
+            # nested partition directories included (hive layout
+            # ``k=v/part-*``). Spark's own writers always write
             # fresh-named parts, but external overwrites must miss too.
-            key += tuple(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                for e in sorted(os.scandir(path), key=lambda e: e.name)
-            )
+            # A listing error re-raises into the except below: a
+            # directory left out of the key could serve a stale plan.
+            files = []
+            for root, dirs, names in os.walk(path, onerror=_reraise):
+                dirs.sort()
+                for n in sorted(names):
+                    f = os.path.join(root, n)
+                    fst = os.stat(f)
+                    files.append((f, fst.st_mtime_ns, fst.st_size))
+            key += tuple(files)
     except OSError:  # non-local FS → skip memoization
         key = None
     cache: dict | None = getattr(spark, "_bedp_table_plans", None)

@@ -177,6 +177,71 @@ class TestWriters:
         ) == ["part=a", "part=b"]
 
 
+def _crc(path):
+    return path.parent / f".{path.name}.crc"
+
+
+class TestLoadTableMemo:
+    def test_in_place_rewrite_of_a_partition_file_misses(
+        self, spark, tmp_path
+    ):
+        # a hive-partitioned table: the part files sit one level down,
+        # so the top-level entries (k=1, k=2) keep their stats when a
+        # part file is rewritten in place at the same size
+        from building_energy_data_pipeline_spark.sources.readers import (
+            load_table,
+        )
+
+        def write(rows, path):
+            spark.createDataFrame(rows, "k int, v string").coalesce(
+                1
+            ).write.partitionBy("k").parquet(str(path))
+            return next((path / "k=1").glob("*.parquet"))
+
+        table = tmp_path / "t.parquet"
+        part = write([(1, "a"), (2, "b")], table)
+        first = load_table(spark, str(tmp_path), "t")
+        assert load_table(spark, str(tmp_path), "t") is first
+        before = part.stat()
+        # same writer, same shape, one byte of data changed; the
+        # checksum sidecar is rewritten in place with it
+        other = write([(1, "z"), (2, "b")], tmp_path / "other")
+        for src, dst in ((other, part), (_crc(other), _crc(part))):
+            data = src.read_bytes()
+            assert len(data) == dst.stat().st_size
+            with open(dst, "r+b") as f:
+                f.write(data)
+        # a coarse-clock filesystem may keep the mtime: move it on
+        os.utime(part, ns=(before.st_atime_ns, before.st_mtime_ns + 10**9))
+        again = load_table(spark, str(tmp_path), "t")
+        assert again is not first, "in-place rewrite served the memo"
+        assert [r.v for r in again.where("k = 1").collect()] == ["z"]
+
+    def test_unlistable_partition_skips_the_memo(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # a partition directory that cannot be listed (EACCES, or
+        # removed mid-walk) must not drop out of the key silently:
+        # the memo is skipped and every call builds a fresh plan
+        from building_energy_data_pipeline_spark.sources.readers import (
+            load_table,
+        )
+
+        spark.createDataFrame(
+            [(1, "a"), (2, "b")], "k int, v string"
+        ).write.partitionBy("k").parquet(str(tmp_path / "t.parquet"))
+        real = os.scandir
+
+        def scandir(p="."):
+            if os.path.basename(os.fspath(p)) == "k=2":
+                raise PermissionError(13, "Permission denied", p)
+            return real(p)
+
+        monkeypatch.setattr(os, "scandir", scandir)
+        first = load_table(spark, str(tmp_path), "t")
+        assert load_table(spark, str(tmp_path), "t") is not first
+
+
 class TestAcquire:
     def test_download_skips_existing(self, tmp_path):
         # no network: the skip-if-exists path (zenodo_client.py:44-50)
