@@ -342,7 +342,12 @@ def main() -> None:
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
-    total = round(sum(t for t in timings.values() if t >= 0), 4)
+    # ingest_melt_only re-times the melt that ingest_melt_write already
+    # contains: a diagnostic entry, kept out of the headline total
+    total = round(
+        sum(t for n, t in timings.items() if t >= 0 and n != "ingest_melt_only"),
+        4,
+    )
     calib_samples.append(_calibrate())  # end-of-run yardstick
     calib = min(calib_samples)
     try:

@@ -61,7 +61,8 @@ def _overlapping_rows(
 ) -> DataFrame:
     """Existing rows that collide with the incoming batch — the
     EXISTS subquery of ``data_loader.py:377-429`` as a left-semi join
-    plus a broadcast bounds cross join."""
+    plus a cross join with the one-row bounds, which the planner
+    broadcasts."""
     out = existing.join(
         incoming.select(entity_col).distinct(), entity_col, "left_semi"
     )
@@ -73,7 +74,7 @@ def _overlapping_rows(
         bounds = incoming.agg(
             F.min(time_col).alias("__min_t"), F.max(time_col).alias("__max_t")
         )
-        out = out.crossJoin(F.broadcast(bounds)).filter(
+        out = out.crossJoin(bounds).filter(
             F.col(time_col).between(
                 F.expr(f"__min_t - INTERVAL {tolerance}"),
                 F.expr(f"__max_t + INTERVAL {tolerance}"),

@@ -82,9 +82,10 @@ def normalize_min_max(
         F.min(value_col).alias("__min"), F.max(value_col).alias("__max")
     )
     joined = (
+        # kept: the bounds' estimate grows with df; test_etl pins it (1 MiB)
         df.join(F.broadcast(bounds), keys, "left")
         if keys
-        else df.crossJoin(F.broadcast(bounds))
+        else df.crossJoin(bounds)
     )
     return joined.withColumn(
         out_col,

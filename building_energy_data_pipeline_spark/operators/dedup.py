@@ -439,7 +439,7 @@ def incremental_lsh_matches(
     # same action as the probe.
     if isinstance(cutoff, DataFrame):
         probe = (
-            slim.join(F.broadcast(cutoff), F.lit(True), "left")
+            slim.join(cutoff, F.lit(True), "left")
             .filter(F.col(id_col) >= F.col("cutoff"))
             .select(F.col(id_col).alias("id_b"), "bk")
         )

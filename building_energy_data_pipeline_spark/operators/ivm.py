@@ -202,6 +202,7 @@ def maintain_rollup(
         patched.where("is_dirty AND new_cnt > 0").select(*keys)
     )
     recomputed = rollup_state(
+        # kept: q233/q247 +1 shuffle (1 MiB)
         detail_after.join(F.broadcast(dirty_keys), keys, "left_semi"),
         keys,
         sum_cols,

@@ -242,7 +242,7 @@ def hot_salted_join(
         .where(F.col("__n") >= hot_threshold)
         .select(*on)
     )
-    hot_keys = F.broadcast(hot_keys)
+    hot_keys = F.broadcast(hot_keys)  # kept: q239 +3 shuffles (1 MiB)
     sk_hot = skewed.join(hot_keys, on, "left_semi")
     sk_cold = skewed.join(hot_keys, on, "left_anti")
     sm_hot = small.join(hot_keys, on, "left_semi")
@@ -325,7 +325,7 @@ def global_row_index(
     w = Window.partitionBy("__pid").orderBy(*cols)
     return (
         ranged.withColumn("__lrn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "__pid")
+        .join(off_df, "__pid")
         .withColumn(index_name, (F.col("__off") + F.col("__lrn")).cast("long"))
         .drop("__pid", "__lrn", "__off")
     )
@@ -382,7 +382,7 @@ def global_running_sum(
     )
     return (
         ranged.withColumn("__lcum", F.sum(value_col).over(w))
-        .join(F.broadcast(off_df), "__pid")
+        .join(off_df, "__pid")
         .withColumn(sum_name, (F.col("__off") + F.col("__lcum")).cast("long"))
         .drop("__pid", "__lcum", "__off")
     )

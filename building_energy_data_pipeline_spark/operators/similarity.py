@@ -15,10 +15,11 @@ the raw cosine agree exactly; displayed values are rounded to 6.
 
 Design for scale
 ----------------
-- The query set is tiny relative to the corpus → ``broadcast()`` it;
-  the brute-force pass is then a map-only scan of the corpus (no
-  shuffle) followed by a per-query top-k (shuffle of |corpus|·|Q|
-  *candidate rows already filtered by the window* — bounded by AQE).
+- The query set is tiny relative to the corpus, so the planner
+  broadcasts it (its size estimate is under the bar); the brute-force
+  pass is then a map-only scan of the corpus (no shuffle) followed by
+  a per-query top-k (shuffle of |corpus|·|Q| *candidate rows already
+  filtered by the window* — bounded by AQE).
 - Corpus norms are precomputed once in the same projection, so each
   pair costs one fused zip_with/aggregate, inside codegen.
 - IVF: k centroid rows broadcast twice (assignment + probe); the
@@ -113,7 +114,7 @@ def brute_force_topk(
         F.col(vec_col).alias("qvec"),
         F.expr(norm_expr(vec_col)).alias("qnorm"),
     )
-    pairs = c.crossJoin(F.broadcast(q)).filter(
+    pairs = c.crossJoin(q).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
     scored = pairs.withColumn(
@@ -220,7 +221,7 @@ def brute_force_topk_arrow(
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(q)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_raw", _pair_cos("cvec", "qvec"))
     )
@@ -303,13 +304,13 @@ def assign_centroids(
         """
         return (
             corpus.withColumn("vnorm", F.expr(norm_expr(vec_col)))
-            .crossJoin(F.broadcast(packed))
+            .crossJoin(packed)
             .withColumn("centroid_id", F.expr(best))
             .drop("__cents")
         )
     scored = (
         corpus.withColumn("vnorm", F.expr(norm_expr(vec_col)))
-        .crossJoin(F.broadcast(cent))
+        .crossJoin(F.broadcast(cent))  # kept: q121/q154 flip build side (sf0.1)
         .withColumn(
             "ccos",
             F.expr(cosine_expr(vec_col, "cent_vec", "vnorm", "cent_norm")),
@@ -679,7 +680,7 @@ def quantized_topk(
     q = quantize(queries, vec_col, "qq").select(
         F.col(id_col).alias("query_id"), "qq"
     )
-    pairs = c.crossJoin(F.broadcast(q)).filter(
+    pairs = c.crossJoin(q).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
     scored = pairs.withColumn(
@@ -1051,7 +1052,7 @@ def _pq_assign(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
       acc -> acc.code)
     """
     return (
-        subs.crossJoin(F.broadcast(packed))
+        subs.crossJoin(packed)
         .withColumn("code_id", F.expr(best))
         .drop("cbs")
     )
@@ -1098,7 +1099,7 @@ def pq_encode(
             F.col(id_col),
             F.expr(_sub_slices_expr(vec_col, m)).alias("svs"),
         )
-        .crossJoin(F.broadcast(packed))
+        .crossJoin(packed)
         .select(F.col(id_col), F.expr(codes).alias("codes"))
     )
 
@@ -1151,7 +1152,7 @@ def pq_adc_topk(
             F.col(id_col).alias("query_id"),
             F.expr(_sub_slices_expr(vec_col, m)).alias("qsvs"),
         )
-        .crossJoin(F.broadcast(packed))
+        .crossJoin(packed)
         .select("query_id", F.expr(lut).alias("lut"))
     )
     adc = (
@@ -1161,7 +1162,7 @@ def pq_adc_topk(
     w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     return (
         codes_df.select(F.col(id_col).alias("neighbor_id"), "codes")
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(q))  # kept: pq_adc_topk cartesian (1 MiB, test_pq)
         .select(
             "query_id",
             "neighbor_id",
@@ -1233,7 +1234,7 @@ def ivf_pq_topk(
             "centroid_id",
             F.expr(_sub_slices_expr(vec_col, m)).alias("svs"),
         )
-        .crossJoin(F.broadcast(packed))
+        .crossJoin(packed)
         .select(
             "neighbor_id", "centroid_id", F.expr(codes).alias("codes")
         )
@@ -1252,7 +1253,7 @@ def ivf_pq_topk(
             "centroid_id",
             F.expr(_sub_slices_expr(vec_col, m)).alias("qsvs"),
         )
-        .crossJoin(F.broadcast(packed))
+        .crossJoin(packed)
         .select("query_id", "centroid_id", F.expr(lut).alias("lut"))
     )
     adc = (
@@ -1261,7 +1262,7 @@ def ivf_pq_topk(
     )
     w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     return (
-        index.join(F.broadcast(q), "centroid_id")
+        index.join(F.broadcast(q), "centroid_id")  # kept: q153/q154 +2 shuffles (sf0.1)
         .select(
             "query_id",
             "neighbor_id",
@@ -1320,7 +1321,7 @@ def bitext_margin_topk(
         F.expr(norm_expr(vec_col)).alias("tnorm"),
     )
     cos = cosine_expr("tvec", "svec", "tnorm", "snorm")
-    pairs = t.crossJoin(F.broadcast(s)).select(
+    pairs = t.crossJoin(F.broadcast(s)).select(  # kept: q155 cartesian (sf0.1)
         "src_id",
         "tgt_id",
         "tgt_lang",
@@ -1430,8 +1431,8 @@ def _margin_topk_from_pairs(
     ax = _nn_sum("src_id", "ax_sum")
     ay = _nn_sum("tgt_id", "ay_sum")
     scored = (
-        pairs.join(F.broadcast(ax), "src_id")
-        .join(F.broadcast(ay), "tgt_id")
+        pairs.join(F.broadcast(ax), "src_id")  # kept: q155/q260 sort-merge (sf0.1)
+        .join(F.broadcast(ay), "tgt_id")  # kept: q155/q260 +1 shuffle (sf0.1)
         .filter((F.col("micro") > 0) & (F.col("ax_sum") + F.col("ay_sum") > 0))
         .select(
             "src_id",

@@ -103,7 +103,7 @@ def countmin_estimate(
     # never-seen token, or losing it entirely when all d cells are
     # empty) instead of the correct estimate 0
     return (
-        keyed.join(F.broadcast(grid), ["row_id", "bucket"], "left")
+        keyed.join(grid, ["row_id", "bucket"], "left")
         .groupBy(token_col, *other)
         .agg(F.min(F.coalesce("c", F.lit(0))).alias("cms_est"))
     )

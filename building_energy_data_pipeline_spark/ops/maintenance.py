@@ -229,7 +229,7 @@ def zorder_key(
         *[F.min(c).cast("double").alias(f"__lo_{c}") for c in cols],
         *[F.max(c).cast("double").alias(f"__hi_{c}") for c in cols],
     )
-    out = df.join(F.broadcast(bounds))
+    out = df.join(bounds)
     n_buckets = 1 << bits_per_col
     bucket_cols = []
     for c in cols:

@@ -173,7 +173,7 @@ def q170_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     tot = obs.agg(F.expr("cast(sum(n_obs) as double)").alias("n_total"))
-    contrib = obs.crossJoin(F.broadcast(tot)).withColumn(
+    contrib = obs.crossJoin(tot).withColumn(
         "c", F.expr(_SRM_CONTRIB)
     )
     # chi2 folds THREE doubles — an unordered SUM's result depends
@@ -185,7 +185,7 @@ def q170_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             " cast(0.0 as double), (acc, s) -> acc + s.c)"
         ).alias("chi2")
     )
-    return contrib.crossJoin(F.broadcast(chi)).select(
+    return contrib.crossJoin(chi).select(
         "arm",
         F.expr("cast(n_obs as bigint)").alias("n_users"),
         F.expr(f"cast(floor({_SRM_EXP} * 1000000) as bigint)").alias(
@@ -255,13 +255,13 @@ def q171_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
     )
     mad = (
-        ev.join(F.broadcast(med), "event_type")
+        ev.join(med, "event_type")
         .groupBy("event_type")
         .agg(F.expr("percentile(abs(value - med), 0.5)").alias("mad"))
     )
     return (
-        ev.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
+        ev.join(F.broadcast(med), "event_type")  # kept: q171 runs 4% slower (sf0.1)
+        .join(mad, "event_type")
         .groupBy("event_type", "n", "med", "mad")
         .agg(
             F.expr(
@@ -485,8 +485,8 @@ def q173_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ecnt = e.agg(F.count("*").alias("n_edges"))
     return (
-        agg.crossJoin(F.broadcast(ecnt))
-        .crossJoin(F.broadcast(tri))
+        agg.crossJoin(ecnt)
+        .crossJoin(tri)
         .select(
             "n_nodes",
             "n_edges",
@@ -549,7 +549,7 @@ def q174_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = r.groupBy("rank").agg(
         F.expr("sum(n_chars) * 1000000 div count(*)").alias("qnorm_u")
     )
-    return r.join(F.broadcast(grid), "rank").select(
+    return r.join(grid, "rank").select(
         "doc_id", "source", "n_chars", "rank",
         F.col("qnorm_u").cast("bigint").alias("qnorm_u"),
     )
@@ -1022,7 +1022,7 @@ def q178_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     score, matched = _bm25_exprs("div")
     lex = (
-        per.crossJoin(F.broadcast(g))
+        per.crossJoin(g)
         .filter(F.expr(matched) > 0)
         .select("doc_id", F.expr(score).cast("long").alias("s"))
         .orderBy(F.desc("s"), "doc_id")
@@ -1046,7 +1046,7 @@ def q178_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dense = (
         emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
+        .crossJoin(qv)
         .select(
             "vec_id",
             F.expr(f"cast(floor({cos} * 1000000) as bigint)").alias(
@@ -1280,7 +1280,7 @@ def q180_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     s = (
-        ev.join(F.broadcast(mu), "event_type")
+        ev.join(mu, "event_type")
         .withColumn(
             "cs", F.sum(F.expr(f"x - mu - {_CUSUM_SLACK}")).over(w)
         )
@@ -1381,7 +1381,7 @@ def q181_hourly_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("sum(v) div count(*)").alias("mu"),
     )
     w = W.partitionBy("event_type").orderBy("hr")
-    y = h.join(F.broadcast(n), "event_type").select(
+    y = h.join(n, "event_type").select(
         "event_type", "hr", F.expr("v - mu").alias("y")
     )
     lagged = y.select(
@@ -1519,12 +1519,12 @@ def q182_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the 9 rows so the orders scan behind it runs ONCE
     j = caching.slot_persist(
         "q182_digits",
-        digits.join(F.broadcast(obs), "d", "left").select(
+        digits.join(obs, "d", "left").select(
             "d", "expected_u", F.expr("coalesce(n_obs, 0L)").alias("n_obs")
         ),
     )
     tot = j.agg(F.sum("n_obs").alias("n"))
-    c = j.crossJoin(F.broadcast(tot)).withColumn(
+    c = j.crossJoin(tot).withColumn(
         "exp_n", F.expr("expected_u * n / 1000000.0")
     )
     # nine-double fold in explicit digit order (the q170 argument:
@@ -1536,7 +1536,7 @@ def q182_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " cast(0.0 as double), (acc, s) -> acc + s.c0)"
         ).alias("chi2")
     )
-    return c.crossJoin(F.broadcast(chi)).select(
+    return c.crossJoin(chi).select(
         "d",
         "n_obs",
         F.expr("cast(n_obs * 1000000 div n as bigint)").alias("share_u"),
@@ -2144,11 +2144,7 @@ def q194_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "customer").select(
-                    "c_custkey", "c_nationkey"
-                )
-            ),
+            load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy(
@@ -2431,7 +2427,7 @@ def q197_cross_correlation(
         F.expr("cast(sum(va) div count(*) as bigint)").alias("ma"),
         F.expr("cast(sum(vb) div count(*) as bigint)").alias("mb"),
     )
-    c = wide.crossJoin(F.broadcast(mu)).groupBy("n").agg(
+    c = wide.crossJoin(mu).groupBy("n").agg(
         F.expr("cast(sum((va - ma) * (vb - mb)) as bigint)").alias(
             "sab"
         ),
@@ -2546,7 +2542,7 @@ def q198_mix_shift_decomposition(
         F.sum("n2").cast("bigint").alias("tn2"),
     )
     return (
-        seg.crossJoin(F.broadcast(tot))
+        seg.crossJoin(tot)
         .filter((F.col("n1") > 0) & (F.col("n2") > 0))
         .select(
             "seg",
@@ -2718,10 +2714,11 @@ def q200_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         co.join(
+            # kept: q200 shuffle-hash-joins (1 MiB)
             F.broadcast(cnt.withColumnRenamed("c", "ci")), "i"
         )
         .join(
-            F.broadcast(
+            F.broadcast(  # kept: q200 +1 shuffle (1 MiB)
                 cnt.select(
                     F.col("i").alias("j"), F.col("c").alias("cj")
                 )
@@ -2859,12 +2856,8 @@ def q201_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n"),
     )
     km = tl.crossJoin(
-        F.broadcast(
-            tl.agg(
-                F.expr(
-                    "array_sort(collect_list(struct(w, d, n)))"
-                ).alias("fs")
-            )
+        tl.agg(
+            F.expr("array_sort(collect_list(struct(w, d, n)))").alias("fs")
         )
     ).select(
         "w",
@@ -2965,7 +2958,7 @@ def q202_abc_classification(
         sum_name="cum",
     ).drop("neg")
     tot = pr.agg(F.sum("rev_c").cast("bigint").alias("total"))
-    cls = cum.crossJoin(F.broadcast(tot)).select(
+    cls = cum.crossJoin(tot).select(
         "rev_c",
         F.expr(
             "case when (cum - rev_c) * 100 < total * 80 then 'A'"
@@ -2980,7 +2973,7 @@ def q202_abc_classification(
             F.count("*").alias("n_parts"),
             F.sum("rev_c").cast("bigint").alias("rev_c"),
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "cls",
             "n_parts",
@@ -3163,7 +3156,7 @@ def q205_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("2 * (cum_incl - ties + 1) + ties - 1").alias("dr"),
     )
     m = (
-        s.join(F.broadcast(dr), "x")
+        s.join(F.broadcast(dr), "x")  # kept: q205 flips build side (sf0.1)
         .groupBy()
         .agg(
             F.expr(
@@ -3283,10 +3276,10 @@ def q206_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c1",
         sum_name="f1",
     )
-    d = cum.crossJoin(F.broadcast(n)).agg(
+    d = cum.crossJoin(n).agg(
         F.expr("max(abs(f0 * n1 - f1 * n0))").alias("dnum")
     )
-    return d.crossJoin(F.broadcast(n)).select(
+    return d.crossJoin(F.broadcast(n)).select(  # kept: q206 flips build side (sf0.1)
         "n0",
         "n1",
         F.expr("cast(dnum as bigint)").alias("d_num"),
@@ -3751,7 +3744,7 @@ def q211_rfm_segmentation(
             ),
             "ck",
         )
-        .crossJoin(F.broadcast(n_df))
+        .crossJoin(n_df)
     )
     scored = ranked.select(
         _ntile_from_rank("r_rn", "n_tot", 4).alias("r_q"),
@@ -3992,7 +3985,7 @@ def q228_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket", F.max("bmax").over(wseq).alias("prev_max")
     )
     scored = (
-        p.join(F.broadcast(prev), "bucket", "left")
+        p.join(prev, "bucket", "left")
         .select(
             "p_partkey",
             "price_c",
@@ -4690,9 +4683,7 @@ def q234_greedy_coverage(
             )
         )
         winners.append(w)
-        newly = toks.join(
-            F.broadcast(w.select("doc_id")), "doc_id", "left_semi"
-        ).select("tok")
+        newly = toks.join(w.select("doc_id"), "doc_id", "left_semi").select("tok")
         covered = (
             newly
             if covered is None
@@ -5442,8 +5433,8 @@ def q244_shapley_attribution(
     ms = m.selectExpr("mask as s", "n as n_s", "n_conv as c_s")
     mu = m.selectExpr("mask as su", "n as n_su", "n_conv as c_su")
     t = (
-        terms.join(F.broadcast(ms), "s", "left")
-        .join(F.broadcast(mu), "su", "left")
+        terms.join(ms, "s", "left")
+        .join(mu, "su", "left")
         .select(
             "ch",
             "s",
@@ -5767,7 +5758,7 @@ def q246_wau_hll_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count_distinct("tok").alias("wau_exact"))
     )
     return (
-        exact.join(F.broadcast(est), "anchor")
+        exact.join(F.broadcast(est), "anchor")  # kept: q246 flips build side (sf0.1)
         .select(
             F.col("anchor").alias("day"),
             "wau_exact",
@@ -5959,7 +5950,7 @@ def q248_latency_approx_quantiles(
             "approx_percentile(lat, array(0.5D, 0.9D), 1000)"
         ).alias("ap"),
     )
-    joined = conv.join(F.broadcast(th), "cohort_w")
+    joined = conv.join(th, "cohort_w")
     audit = joined.groupBy("cohort_w").agg(
         F.count("*").alias("n_conv"),
         F.expr(

@@ -300,7 +300,7 @@ def q65_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimals — functions/scalar.py convention)
     scored = (
         tf.join(df_, "tok")
-        .crossJoin(F.broadcast(n_df))
+        .crossJoin(n_df)
         .withColumn(
             "score_micro",
             F.expr("tf * (n_docs + 1) * 1000000 div (df + 1)").cast("bigint"),

@@ -96,7 +96,7 @@ def q253_python_datasource_scan(
     )
     return (
         telem.join(
-            F.broadcast(nation),
+            nation,
             telem.sensor == nation.n_nationkey,
         )
         .groupBy(F.col("n_regionkey").cast("long").alias("region_key"))
@@ -226,7 +226,7 @@ def q258_python_datasource_stream(
     folded = spark.table(name)
     return (
         folded.join(
-            F.broadcast(nation),
+            F.broadcast(nation),  # kept: q258 flips build side (sf0.1)
             folded.sensor == nation.n_nationkey,
         )
         .groupBy(F.col("n_regionkey").cast("long").alias("region_key"))

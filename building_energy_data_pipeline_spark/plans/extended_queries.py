@@ -112,7 +112,7 @@ def q37_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(similarity.norm_expr("embedding")).alias("nb"),
     )
     return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+        a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cos",
             F.round(F.expr(similarity.cosine_expr("va", "vb", "na", "nb")), 6),

@@ -426,7 +426,7 @@ def q108_zipf_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         top.withColumn("cum_occ", F.sum("n_occ").over(w50))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "rank",
             "tok",
@@ -535,7 +535,7 @@ def q109_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     contrib = (
         edges.join(out, "w1")
-        .crossJoin(F.broadcast(nodes))
+        .crossJoin(nodes)
         .select(
             F.col("w2").alias("token"),
             "nn",
@@ -587,7 +587,7 @@ def _q118_oracle(iters: int = PR_ITERS) -> str:
     ]
     for j in range(1, iters + 1):
         ctes.append(
-            f"""r{j} AS (
+            f"""r{j} AS MATERIALIZED (
       SELECT n.node,
              (CAST(1 AS DOUBLE) - {d}) / nn.n
                + {d} * COALESCE(f.inflow, CAST(0 AS DOUBLE)) AS rank
@@ -615,7 +615,8 @@ def q118_pagerank_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-normalized edge probabilities and dangling-mass-discard
     semantics — over the corpus bigram graph (q109's edges) for a
     FIXED budget of {PR_ITERS} rounds (``tol=0.0``, no early stop).
-    The DuckDB twin unrolls the same rounds as CTEs, so the LOOP's
+    The DuckDB twin unrolls the same rounds as one MATERIALIZED CTE
+    each (its cost grows linearly with the rounds), so the LOOP's
     output — not just one step (q109) — is hash-pinned. Unlike q109
     (in-edge tokens only), the loop covers the FULL node set:
     source-only tokens carry the base rank (1-d)/N.
@@ -1098,7 +1099,7 @@ def q128_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tok", F.lit(1).alias("in_vocab"))
     )
     return (
-        toks.join(F.broadcast(vocab), "tok", "left")
+        toks.join(F.broadcast(vocab), "tok", "left")  # kept: q128 +3 shuffles (sf0.1)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
@@ -1339,7 +1340,7 @@ def q131_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         bg.filter("in_sample")
         .groupBy("bigram")
         .agg(F.count("*").alias("c_sample"))
-        .crossJoin(F.broadcast(samp_totals))
+        .crossJoin(samp_totals)
         .filter(
             F.expr(
                 f"c_sample * 10000 * {HH_SAFETY_DIV} >= {HH_BP} * n_sample"
@@ -1348,10 +1349,10 @@ def q131_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("bigram")
     )
     return (
-        bg.join(F.broadcast(candidates), "bigram")
+        bg.join(F.broadcast(candidates), "bigram")  # kept: q131 runs 8% slower (sf0.1)
         .groupBy("bigram")
         .agg(F.count("*").alias("n_occurrences"))
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .filter(F.expr(f"n_occurrences * 10000 >= {HH_BP} * n_total"))
         .select(
             "bigram",
@@ -1448,7 +1449,7 @@ def q135_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # condition NULL → pass-through (ADVICE r5 #4); with the
     # guaranteed-1-row top this is plan-equivalent to the cross join
     return (
-        staged.join(F.broadcast(top), F.lit(True), "left")
+        staged.join(top, F.lit(True), "left")
         .select(
             "doc_id",
             "pair_a",
@@ -1559,7 +1560,7 @@ def q136_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         # left join on TRUE: empty top → null pair → merge fold
         # passes the stream through unchanged (ADVICE r5 #4)
         merged = (
-            staged.join(F.broadcast(top), F.lit(True), "left")
+            staged.join(top, F.lit(True), "left")
             .select(
                 "doc_id",
                 F.expr(
@@ -1574,7 +1575,7 @@ def q136_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.array_join("toks", " ")).alias("final_md5"),
     )
     for top in merge_tops:
-        out = out.join(F.broadcast(top), F.lit(True), "left")
+        out = out.join(top, F.lit(True), "left")
     return out.select(
         "doc_id",
         *[
@@ -1680,9 +1681,9 @@ def q137_association_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     u1 = uni.select(F.col("tok").alias("w1"), F.col("c").alias("c_w1"))
     u2 = uni.select(F.col("tok").alias("w2"), F.col("c").alias("c_w2"))
     return (
-        bg.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(tot))
+        bg.join(u1, "w1")
+        .join(u2, "w2")
+        .crossJoin(tot)
         .select(
             "w1",
             "w2",
@@ -1762,7 +1763,7 @@ def q142_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = t.groupBy("source").agg(
         F.expr("percentile(n_chars, 0.5)").alias("med")
     )
-    d = t.join(F.broadcast(m), "source").select(
+    d = t.join(m, "source").select(
         "source",
         "med",
         F.abs(F.col("n_chars") - F.col("med")).alias("dev"),
@@ -1772,7 +1773,7 @@ def q142_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flag = F.expr(f"CASE WHEN dev > {MAD_K} * mad THEN 1 ELSE 0 END")
     return (
-        d.join(F.broadcast(m2), "source")
+        d.join(m2, "source")
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1860,7 +1861,7 @@ def q145_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tok = (
         scale.spread_scan(docs, cols=["doc_id", "text"], by=["doc_id"])
-        .crossJoin(F.broadcast(cut))
+        .crossJoin(cut)
         .select(
             (F.col("doc_id") < F.col("cutoff")).alias("is_old"),
             F.explode(F.expr(TOK)).alias("tok"),
@@ -1877,7 +1878,7 @@ def q145_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_old").alias("n_a"), F.sum("c_new").alias("n_b")
     )
     tv = (
-        cnt.crossJoin(F.broadcast(tot))
+        cnt.crossJoin(tot)
         .agg(
             F.expr(
                 "sum(abs(c_old * n_b - c_new * n_a)) * 500"
@@ -1887,8 +1888,8 @@ def q145_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cnt.filter(F.col("c_old") + F.col("c_new") >= DRIFT_MIN)
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(tv))
+        .crossJoin(tot)
+        .crossJoin(tv)
         .select(
             "tok",
             "c_old",
@@ -2000,7 +2001,7 @@ def q139_bpe_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_tops.append(top)
         # left join on TRUE: an empty train-split top passes the
         # stream through unchanged (ADVICE r5 #4, q136's guard)
-        merged = staged.join(F.broadcast(top), F.lit(True), "left").select(
+        merged = staged.join(top, F.lit(True), "left").select(
             "doc_id",
             "in_train",
             F.expr(
@@ -2015,7 +2016,7 @@ def q139_bpe_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.array_join("toks", " ")).alias("final_md5"),
     )
     for top in merge_tops:
-        out = out.join(F.broadcast(top), F.lit(True), "left")
+        out = out.join(top, F.lit(True), "left")
     return out.select(
         "doc_id",
         "in_train",
@@ -2150,7 +2151,7 @@ def q148_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     score, matched = _bm25_exprs("div")
     return (
-        per.crossJoin(F.broadcast(g))
+        per.crossJoin(g)
         .filter(F.expr(matched) > 0)
         .select(
             "doc_id",

@@ -49,8 +49,8 @@ def q45_rollup_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .rollup("r_name", "n_name")
         .agg(
             F.grouping_id().alias("gid"),
@@ -215,7 +215,7 @@ def q50_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") < 2)
     w = W.partitionBy("n_nationkey").orderBy(F.round("c_acctbal", 0).desc())
     return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
         .select(
             F.col("n_nationkey").alias("nationkey"),
             "c_custkey",
@@ -675,7 +675,7 @@ def q116_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("mx"),
     )
     return (
-        k.crossJoin(F.broadcast(s))
+        k.crossJoin(s)
         .select(
             "user_id",
             "n",
@@ -807,9 +807,9 @@ def q159_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom_pass = " AND ".join(probe(r) for r in range(BLOOM_K))
     j = (
         li.select("l_returnflag", "l_orderkey")
-        .crossJoin(F.broadcast(words))
+        .crossJoin(words)
         .join(
-            F.broadcast(dim),
+            dim,
             F.col("l_orderkey") == F.col("o_orderkey"),
             "left",
         )
@@ -915,7 +915,7 @@ def q167_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(min(e) + max(e)) div 2").alias("t")
     )
     users = (
-        ev.crossJoin(F.broadcast(bounds))
+        ev.crossJoin(bounds)
         .groupBy("user_id")
         .agg(
             F.expr(
@@ -942,7 +942,7 @@ def q167_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(sum(pre) as double)").alias("sp_a"),
         F.expr("cast(sum(post) as double)").alias("so_a"),
     )
-    return arms.crossJoin(F.broadcast(p)).select(
+    return arms.crossJoin(p).select(
         "arm",
         F.expr("cast(n_a as bigint)").alias("n_users"),
         F.expr("cast(floor(so_a / n_a * 1000000) as bigint)").alias(
@@ -1007,9 +1007,10 @@ def q187_local_supplier_volume(
         .select("r_regionkey")
     )
     n = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey", "n_name")
     s = load_table(spark, sf_dir, "supplier").join(
+        # kept: q187 flips build side (sf0.1)
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey", "s_nationkey", "n_name")
     c = load_table(spark, sf_dir, "customer").select(
@@ -1030,9 +1031,9 @@ def q187_local_supplier_volume(
     )
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(
-            F.broadcast(s),
+            F.broadcast(s),  # kept: q187 +2 shuffles (sf0.1)
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
@@ -1108,7 +1109,7 @@ def q188_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r_regionkey")
     )
     n1 = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     ).select(F.col("n_nationkey").alias("cust_nkey"))
     n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("supp_nkey"),
@@ -1144,16 +1145,12 @@ def q188_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("l_extendedprice * (1 - l_discount)").alias("volume"),
     )
     base = (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(n1), F.col("c_nationkey") == F.col("cust_nkey")
-        )
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            F.broadcast(n2), F.col("s_nationkey") == F.col("supp_nkey")
-        )
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(n1, F.col("c_nationkey") == F.col("cust_nkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n2, F.col("s_nationkey") == F.col("supp_nkey"))
     )
     nat = "CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END"
     return base.groupBy("o_year").agg(
@@ -1285,7 +1282,7 @@ def q190_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", "p_brand", "p_size"
     )
     return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .filter(F.expr(disj))
         .agg(
             F.count("*").alias("n_matched"),
@@ -1414,7 +1411,7 @@ def q208_sales_opportunity(
     )
     eligible = (
         cust.filter(F.col("cc").isin(0, 2, 4))
-        .crossJoin(F.broadcast(ab))
+        .crossJoin(ab)
         .filter(F.col("c_acctbal") > F.col("ab"))
         .join(
             orders_k,

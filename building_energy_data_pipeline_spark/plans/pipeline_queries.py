@@ -178,7 +178,7 @@ def q84_decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("g").isNotNull())
     )
     return (
-        tr.join(F.broadcast(ev), "g", "left")
+        tr.join(ev, "g", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_shingles"),
@@ -825,7 +825,7 @@ def q92_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(f"NOT ({EVAL_PRED})")
         .select("doc_id", F.explode_outer("sh").alias("g"))
         .filter(F.col("g").isNotNull())  # empty-doc guard, see q84
-        .join(F.broadcast(ev), "g", "left")
+        .join(ev, "g", "left")
         .groupBy("doc_id")
         .agg(
             F.expr("(count(__hit) * 10000) div count(*)").alias(
@@ -937,11 +937,13 @@ def q110_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly rounded on both engines, so the floor is identical;
     everything after is integer arithmetic.
 
-    Scale: two tiny aggregates over source cardinality (broadcast
-    back), then one narrow filtered scan — no shuffle of the corpus;
-    the selection predicate is a pure function of (doc_id, source
-    stats), so re-runs on a grown corpus re-derive a consistent
-    sample without any stored state.
+    Scale: two tiny aggregates over source cardinality, then one
+    narrow filtered scan. The planner broadcasts the (doc_id, source)
+    projection while it is under the bar (one exchange fewer than
+    broadcasting the stats); below a 64 KiB bar at sf0.1 it
+    shuffle-joins it on source instead. The selection predicate is a
+    pure function of (doc_id, source stats), so re-runs on a grown
+    corpus re-derive a consistent sample without any stored state.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     stats = (
@@ -953,11 +955,11 @@ def q110_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tot = stats.agg(F.sum("weight").alias("sum_w"))
-    tgt = stats.crossJoin(F.broadcast(tot)).withColumn(
+    tgt = stats.crossJoin(tot).withColumn(
         "target_docs",
         F.expr(f"({_TEMP_TARGET} * weight) div sum_w"),
     )
-    sel = docs.join(F.broadcast(tgt), "source").filter(
+    sel = docs.join(tgt, "source").filter(
         hash_bucket("doc_id") * F.col("n_docs")
         < F.col("target_docs") * HASH_MOD
     )
@@ -1276,7 +1278,7 @@ def q134_length_bucketed_batches(
     offs = idx.groupBy("bucket").agg(F.min("gidx").alias("off"))
     pad = F.max("n_toks") * F.count("*") - F.sum("n_toks")
     return (
-        idx.join(F.broadcast(offs), "bucket")
+        idx.join(F.broadcast(offs), "bucket")  # kept: q134 sort-merges (1 MiB)
         .withColumn(
             "batch_id", F.expr(f"(gidx - off) div {LEN_BATCH}").cast("long")
         )
@@ -1399,7 +1401,7 @@ def q140_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = (
         sizes.join(
-            F.broadcast(lo),
+            lo,
             (F.col("avail2") < F.col("avail"))
             | (
                 (F.col("avail2") == F.col("avail"))
@@ -1413,7 +1415,7 @@ def q140_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     feas = (
-        ranked.crossJoin(F.broadcast(tot))
+        ranked.crossJoin(tot)
         .filter(F.expr("pref + (s - k) * avail <= budget"))
         .select("k", "pref")
         .union(
@@ -1426,14 +1428,14 @@ def q140_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ks = feas.orderBy(F.desc("k")).limit(1).select(
         F.col("k").alias("kstar"), F.col("pref").alias("prefstar")
     )
-    lvl = ks.crossJoin(F.broadcast(tot)).select(
+    lvl = ks.crossJoin(F.broadcast(tot)).select(  # kept: q140 flips build side (sf0.1)
         F.expr(
             "CASE WHEN kstar = s THEN mx"
             " ELSE (budget - prefstar) div (s - kstar) END"
         ).alias("level"),
         "budget",
     )
-    return sizes.crossJoin(F.broadcast(lvl)).select(
+    return sizes.crossJoin(lvl).select(
         "source",
         F.col("avail").alias("avail_tokens"),
         F.expr("least(avail, level)").alias("alloc_tokens"),
@@ -1543,7 +1545,7 @@ def q144_dsir_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_r").alias("n_r"),
         F.count("*").alias("v"),
     )
-    w = cnt.crossJoin(F.broadcast(tot)).select(
+    w = cnt.crossJoin(tot).select(
         "tok",
         F.expr(
             "(c_t + 1) * (n_r + v) * 1000 div ((c_r + 1) * (n_t + v))"
@@ -1551,7 +1553,7 @@ def q144_dsir_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         tok.filter(~F.col("is_target"))
-        .join(F.broadcast(w), "tok")
+        .join(F.broadcast(w), "tok")  # kept: q144 flips build side (sf0.1)
         .groupBy("doc_id")
         .agg(
             F.max("source").alias("source"),

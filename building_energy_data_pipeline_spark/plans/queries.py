@@ -168,7 +168,7 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         orders.join(rev, orders.o_orderkey == rev.l_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .select("o_orderkey", "c_name", "o_orderdate", "revenue")
         .orderBy(F.desc("revenue"), "o_orderkey")
         .limit(10)
@@ -396,7 +396,7 @@ def q10_cross_join_constants(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec_avg("l_extendedprice").alias("avg_price"),
         F.count("*").alias("n_items"),
     )
-    return region.crossJoin(F.broadcast(stats)).select(
+    return region.crossJoin(stats).select(
         "r_name", "avg_price", "n_items"
     )
 
@@ -488,8 +488,8 @@ def q13_regional_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     joined = cust.join(
-        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
-    ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation, cust.c_nationkey == nation.n_nationkey
+    ).join(region, nation.n_regionkey == region.r_regionkey)
     return joined.rollup("r_name", "n_name").agg(
         F.grouping("r_name").cast("int").alias("g_region"),
         F.grouping("n_name").cast("int").alias("g_nation"),
@@ -723,7 +723,7 @@ def q21_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalized; deterministic tiebreak on the unique key."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    joined = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+    joined = orders.join(cust, orders.o_custkey == cust.c_custkey)
     w = W.partitionBy("c_mktsegment").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )

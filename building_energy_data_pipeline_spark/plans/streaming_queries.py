@@ -736,7 +736,7 @@ def q168_streaming_hll_maintenance(
             .agg(F.countDistinct("tok").alias("exact_distinct"))
         )
         return (
-            exact.join(F.broadcast(est), "source")
+            exact.join(est, "source")
             .select(
                 "source",
                 "exact_distinct",
@@ -880,8 +880,8 @@ def q186_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .rowsBetween(W.unboundedPreceding, W.currentRow)
             )
             b = (
-                batch_df.join(F.broadcast(mu), "event_type")
-                .join(F.broadcast(seed), "event_type", "left")
+                batch_df.join(mu, "event_type")
+                .join(seed, "event_type", "left")
                 .withColumn("cs0", F.expr("coalesce(cs0, 0L)"))
                 .withColumn(
                     "rmin0",
@@ -1159,7 +1159,7 @@ def q235_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{ivm.OP_COL} = 'D'"
             ).select("l_orderkey").distinct()
             detail_next = detail.read().join(
-                F.broadcast(dels), "l_orderkey", "left_anti"
+                dels, "l_orderkey", "left_anti"
             ).unionByName(
                 batch_df.where(f"{ivm.OP_COL} = 'I'").drop(
                     ivm.OP_COL
@@ -1611,7 +1611,7 @@ def q251_streaming_bloom_gate(
                     )
                 # (4) broadcast-bloom probe; hits confirm exactly
                 probed = (
-                    cand.crossJoin(F.broadcast(words))
+                    cand.crossJoin(words)
                     .withColumn("slow_path", F.expr(bloom_pass))
                     .select("event_id", "event_type", "slow_path")
                 )

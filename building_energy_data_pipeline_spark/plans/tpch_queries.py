@@ -90,7 +90,7 @@ def q212_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey")
     )
     li = load_table(spark, sf_dir, "lineitem").join(
-        F.broadcast(seg), F.col("l_partkey") == F.col("p_partkey")
+        seg, F.col("l_partkey") == F.col("p_partkey")
     )
     costs = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
@@ -105,8 +105,8 @@ def q212_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
-        best.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        best.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .select(
             F.col("l_partkey").alias("p_partkey"),
             "s_name",
@@ -272,12 +272,13 @@ def q215_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_name").isin(*pair)
     )
     n = load_table(spark, sf_dir, "nation").join(
+        # kept: q215 flips build side (sf0.1)
         F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
     )
     c = (
         load_table(spark, sf_dir, "customer")
         .join(
-            F.broadcast(
+            F.broadcast(  # kept: q215 flips build side (sf0.1)
                 n.select(
                     F.col("n_nationkey").alias("cnk"),
                     F.col("r_name").alias("cust_region"),
@@ -290,7 +291,7 @@ def q215_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(
+            F.broadcast(  # kept: q215 flips build side (sf0.1)
                 n.select(
                     F.col("n_nationkey").alias("snk"),
                     F.col("r_name").alias("supp_region"),
@@ -318,6 +319,7 @@ def q215_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        # kept, both: q215 +2 shuffles without either (sf0.1)
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .filter(
@@ -393,9 +395,9 @@ def q216_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice", "l_discount", "l_quantity",
     )
     return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("n_name", "o_year")
         .agg(
@@ -470,8 +472,8 @@ def q217_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(dec_sum("rev").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
@@ -536,12 +538,14 @@ def q218_important_part_values(
         .select("r_regionkey")
     )
     n = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey")
     s = load_table(spark, sf_dir, "supplier").join(
+        # kept: q218 flips build side (sf0.1)
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
     li = load_table(spark, sf_dir, "lineitem").join(
+        # kept: q218 sort-merges (sf0.1)
         F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi"
     )
     vals = caching.slot_persist(
@@ -555,7 +559,7 @@ def q218_important_part_values(
         F.count("*").alias("n_parts"),
     )
     return (
-        vals.crossJoin(F.broadcast(total))
+        vals.crossJoin(total)
         .filter(
             F.col("value_u") * F.col("n_parts")
             > F.lit(2) * F.col("total_u")
@@ -698,7 +702,7 @@ def q220_promo_revenue_share(
     )
     total = dec_sum(F.expr("l_extendedprice * (1 - l_discount)"))
     return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             promo.alias("promo_revenue"),
             total.alias("total_revenue"),
@@ -770,9 +774,9 @@ def q221_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = rev.agg(F.max("total_rev_u").alias("max_rev_u"))
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .filter(F.col("total_rev_u") == F.col("max_rev_u"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_rev_u")
     )
 
@@ -832,11 +836,11 @@ def q222_supplier_part_counts(
     )
     return (
         ps.join(
-            F.broadcast(bad),
+            bad,
             F.col("l_suppkey") == F.col("s_suppkey"),
             "left_anti",
         )
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -893,7 +897,7 @@ def q223_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand = caching.slot_persist(
         "q223_brand",
         load_table(spark, sf_dir, "lineitem")
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .select("l_partkey", "l_quantity", "l_extendedprice"),
     )
     stats = brand.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
@@ -969,8 +973,9 @@ def q224_large_volume_customers(
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
+        # kept: q224 +1 shuffle (1 MiB)
         o.join(F.broadcast(q), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "c_name", "c_custkey", "o_orderkey", "o_orderdate",
             "o_totalprice", "total_qty",
@@ -1050,14 +1055,16 @@ def q225_dominant_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r_regionkey")
     )
     n = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey", "n_name")
     s = load_table(spark, sf_dir, "supplier").join(
+        # kept: q225 flips build side (sf0.1)
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey", "s_name", "n_name")
     return (
         shipped.join(totals, F.col("l_partkey") == F.col("t_partkey"))
         .filter(F.col("sq") * F.lit(2) > F.col("tq"))
+        # kept: q225 +1 shuffle (1 MiB)
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_suppkey", "s_name", "n_name")
         .agg(F.count("*").alias("n_parts_dominated"))
@@ -1154,7 +1161,7 @@ def q226_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("min_supp") != F.col("max_supp"))
             & (F.col("min_late") == F.col("max_late"))
         )
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
         .orderBy(F.col("numwait").desc(), F.col("s_name"))

@@ -1123,7 +1123,7 @@ def q132_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(similarity.norm_expr("embedding")).alias("cnorm"),
     )
     scored = (
-        corpus.crossJoin(F.broadcast(queries))
+        corpus.crossJoin(F.broadcast(queries))  # kept: q132 cartesian (1 MiB)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -1263,7 +1263,7 @@ def q133_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_vec = (
         scale.spread_scan(emb, by=["vec_id"])
-        .crossJoin(F.broadcast(cents_one))
+        .crossJoin(cents_one)
         .withColumn("__vn", F.expr(similarity.norm_expr("embedding")))
         .withColumn(
             "__own_cv", F.expr("filter(cents, s -> s.label = label)[0].cv")
@@ -1369,6 +1369,7 @@ def q138_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sa.crossJoin(sb)
         .filter(F.col("source_a") < F.col("source_b"))
+        # kept: q138 +1 shuffle (sf0.1)
         .join(F.broadcast(shared), ["source_a", "source_b"], "left")
         .select(
             "source_a",
@@ -1512,8 +1513,8 @@ def q143_embedding_covariance(
         " - cast(sx_i as double) * cast(sx_j as double) / n) / n, 6)"
     )
     return (
-        s.join(F.broadcast(dx), "i")
-        .join(F.broadcast(dy), "j")
+        s.join(dx, "i")
+        .join(dy, "j")
         .select(
             F.col("i").cast("long").alias("dim_i"),
             F.col("j").cast("long").alias("dim_j"),
@@ -1609,8 +1610,8 @@ def q146_embedding_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "coverage_permille"
             ),
         )
-        .crossJoin(F.broadcast(orph))
-        .crossJoin(F.broadcast(dups))
+        .crossJoin(orph)
+        .crossJoin(dups)
         .select(
             "source",
             "n_docs",
@@ -1712,8 +1713,8 @@ def q147_neardup_transitivity(
         .agg(F.count("*").alias("n_triangles"))
     )
     return (
-        ec.crossJoin(F.broadcast(agg))
-        .crossJoin(F.broadcast(tri))
+        ec.crossJoin(F.broadcast(agg))  # kept: q147 flips build side (sf0.1)
+        .crossJoin(tri)
         .select(
             "n_edges",
             "n_vertices",
@@ -1875,9 +1876,7 @@ def q150_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     v2 = (
-        sym.join(
-            F.broadcast(u1.select(F.col("i").alias("j"), "u1")), "j"
-        )
+        sym.join(u1.select(F.col("i").alias("j"), "u1"), "j")
         .groupBy("i")
         .agg(F.sum(F.expr("g * u1")).cast("long").alias("v2"))
         .withColumn("m2", F.max(F.abs(F.col("v2"))).over(w0))
@@ -1989,11 +1988,9 @@ def q151_label_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         scale.spread_scan(emb, by=["vec_id"]), seeds
     )
     pred = assigned.join(
-        F.broadcast(
-            seeds.select(
-                F.col("vec_id").alias("centroid_id"),
-                F.col("label").alias("pred_label"),
-            )
+        seeds.select(
+            F.col("vec_id").alias("centroid_id"),
+            F.col("label").alias("pred_label"),
         ),
         "centroid_id",
     )
@@ -2041,7 +2038,7 @@ def q151_label_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         " END as bigint)"
     )
     return (
-        per_class.crossJoin(F.broadcast(tot))
+        per_class.crossJoin(tot)
         .select(
             F.col("k").cast("long").alias("label"),
             F.col("n_true").cast("long").alias("n_true"),
@@ -2439,7 +2436,7 @@ def q162_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("tok").alias("exact_distinct")
     )
     return (
-        exact.join(F.broadcast(est), "source")
+        exact.join(F.broadcast(est), "source")  # kept: q162 flips build side (sf0.1)
         .select(
             "source",
             "exact_distinct",
@@ -2531,7 +2528,7 @@ def q165_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_RW['w0']} as w0", f"{_RW['w1']} as w1", f"{_RW['w2']} as w2"
     )
     score = "(w0 + w1 * x1 + w2 * x2)"
-    return feats.crossJoin(F.broadcast(w)).select(
+    return feats.crossJoin(w).select(
         "doc_id",
         "lang",
         "is_train",

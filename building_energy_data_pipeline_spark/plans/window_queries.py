@@ -293,7 +293,7 @@ def q73_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("hour_start").alias("lo"), F.max("hour_start").alias("hi")
     )
     types = hourly.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(bounds)).select(
+    spine = types.crossJoin(bounds).select(
         "event_type",
         F.explode(
             F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
@@ -621,7 +621,7 @@ def q141_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = g.filter(F.col("week_offset") == 0).select(
         "cohort_week", F.col("n_active").alias("n_cohort")
     )
-    return g.join(F.broadcast(base), "cohort_week").select(
+    return g.join(base, "cohort_week").select(
         "cohort_week",
         "week_offset",
         "n_active",

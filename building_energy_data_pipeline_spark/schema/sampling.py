@@ -81,7 +81,7 @@ def hash_random_sample(df: DataFrame, key_col: str, n: int) -> DataFrame:
         (target - 2) * HASH_MOD
     )
     return (
-        df.join(F.broadcast(bounds))
+        df.join(bounds)
         .where(
             keep
             | (F.col(key_col) == F.col("__mn"))
@@ -110,7 +110,7 @@ def hash_stratified_sample(
         return df
     quota = max(1, n // n_strata)
     return (
-        df.join(F.broadcast(sizes), strata_col)
+        df.join(sizes, strata_col)
         .where(hash_bucket(key_col) * F.col("__sz") < quota * HASH_MOD)
         .drop("__sz")
     )

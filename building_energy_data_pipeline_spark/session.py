@@ -59,11 +59,8 @@ def get_spark(
         # headline query (−4% aggregate), no regressions beyond noise.
         # The planner's build-side size checks still gate the choice,
         # so the at-scale OOM risk profile is the documented SHJ one;
-        # SPARK_GRAFT_PREFER_SMJ=true restores the old default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # ``extra_conf`` or ``spark.conf.set`` restores the old default.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # AQE: runtime shuffle-partition coalescing, skew-join splitting,
         # runtime broadcast conversion — the scale levers.
         .config("spark.sql.adaptive.enabled", "true")

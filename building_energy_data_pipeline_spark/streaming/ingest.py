@@ -217,9 +217,10 @@ def enrich_stream(
     and holds no store (contrast q100's stream-stream join, whose
     state must be watermark-bounded).
 
-    The dimension is broadcast explicitly: at 100 TB of stream the
-    static side is the small side by construction (a dim that doesn't
-    fit a broadcast belongs in a stream-stream join or a foreachBatch
+    The planner broadcasts the dimension when its size estimate is
+    under the session's bar: at 100 TB of stream the static side is
+    the small side by construction (a dim that doesn't fit a
+    broadcast belongs in a stream-stream join or a foreachBatch
     MERGE instead). Slowly-changing dims: the static plan re-executes
     per micro-batch, but a ``spark.read.parquet(path)`` dim pins its
     file listing at read time — a rewritten directory then fails the
@@ -233,4 +234,4 @@ def enrich_stream(
     ``how``: "left" keeps unmatched events (nulls for dim columns —
     the audit-friendly default); "inner" drops them.
     """
-    return stream.join(F.broadcast(dim), keys, how)
+    return stream.join(dim, keys, how)

@@ -321,3 +321,108 @@ class TestWriteIdempotent:
         )
         assert res.has_overlap is False
         assert spark.read.parquet(p).count() == 2
+
+
+# ---------------------------------------------------------------------------
+# Plan pins: the fact side never shuffles for the gate or the bounds
+# ---------------------------------------------------------------------------
+
+
+def _meter_rows(spark, n: int, t0: int):
+    """``n`` melted meter rows, one a minute from epoch second ``t0``,
+    over 200 buildings and 4 meters."""
+    meters = F.array(*[F.lit(m) for m in ("electricity", "gas", "water", "steam")])
+    return spark.range(n).select(
+        F.expr(f"timestamp_seconds({t0} + id * 60)").alias("timestamp"),
+        F.concat(F.lit("b"), (F.col("id") % 200).cast("string")).alias(
+            "building_id"
+        ),
+        F.element_at(meters, (F.col("id") % 4 + 1).cast("int")).alias("meter"),
+        (F.col("id") % 997 * 0.5).alias("meter_reading"),
+    )
+
+
+def _scan_ancestors(df, path: str) -> list[list[str]]:
+    """For each scan of ``path`` in ``df``'s physical plan (AQE's
+    initial plan), the class names of the operators above it."""
+    out = []
+
+    def walk(node, above):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), above)
+        if cls == "FileSourceScanExec" and path in str(
+            node.relation().location().rootPaths().head()
+        ):
+            out.append(above)
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next(), above + [cls])
+
+    walk(df._jdf.queryExecution().executedPlan(), [])
+    return out
+
+
+_FACT_SHUFFLES = (
+    "ShuffleExchange",
+    "CartesianProduct",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+)
+
+
+class TestFactSideNeverShuffles:
+    """The fact table streams through map-only: the gate's distinct
+    keys and time bounds, and the normalization bounds, reach it as
+    broadcasts — at the default bar and at a 1 MiB bar, where the
+    per-meter bounds' size estimate (Catalyst scales a grouped
+    aggregate with its input) is over the bar."""
+
+    @pytest.fixture(scope="class")
+    def tables(self, spark, tmp_path_factory):
+        d = tmp_path_factory.mktemp("fact")
+        fact, batch = str(d / "warehouse"), str(d / "batch")
+        _meter_rows(spark, 400_000, 1451606400).write.parquet(fact)
+        _meter_rows(spark, 5_000, 1451606400 + 400_000 * 60).write.parquet(batch)
+        return fact, batch
+
+    @pytest.fixture(params=["10485760", "1048576"], ids=["default", "1MiB"])
+    def bar(self, spark, request):
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", request.param)
+        yield
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    def test_overlap_gate(self, spark, tables, bar):
+        from building_energy_data_pipeline_spark.etl.loader import (
+            _overlapping_rows,
+        )
+
+        fact, batch = tables
+        hits = _overlapping_rows(
+            spark.read.parquet(fact),
+            spark.read.parquet(batch),
+            "building_id",
+            "meter",
+            "timestamp",
+            "1 HOUR",
+        )
+        (above,) = _scan_ancestors(hits, fact)
+        assert not [c for c in above if c.startswith(_FACT_SHUFFLES)], above
+        res = check_data_overlap(
+            spark.read.parquet(fact), spark.read.parquet(batch), "raw"
+        )
+        # the warehouse's last hour (60 rows, one a minute) is in the window
+        assert res.has_overlap is True and len(res.affected_entities) == 60
+
+    @pytest.mark.parametrize("keys", [None, ["meter"]], ids=["global", "meter"])
+    def test_normalize_bounds(self, spark, tables, bar, keys):
+        fact, _ = tables
+        out = normalize_min_max(spark.read.parquet(fact), partition_by=keys)
+        # the streamed scan is the one not under a broadcast
+        streamed = [
+            a for a in _scan_ancestors(out, fact)
+            if "BroadcastExchangeExec" not in a
+        ]
+        assert len(streamed) == 1, streamed
+        assert not [c for c in streamed[0] if c.startswith(_FACT_SHUFFLES)]

@@ -381,11 +381,11 @@ class TestSessionControl:
         from building_energy_data_pipeline_spark.ops import run_with_timeout
 
         def slow():
-            big = spark.range(200_000)
+            # a range scan checks for task interruption as it goes, so
+            # the cancelled tasks stop instead of holding the cores
             return (
-                big.alias("a")
-                .crossJoin(big.alias("b"))
-                .select(F.md5(F.expr("cast(a.id + b.id as string)")).alias("h"))
+                spark.range(0, 10**12, 1, 4)
+                .select(F.md5(F.col("id").cast("string")).alias("h"))
                 .filter(F.col("h").startswith("ffffffffff"))
                 .count()
             )
@@ -394,6 +394,10 @@ class TestSessionControl:
         with pytest.raises(TimeoutError, match="cancelled"):
             run_with_timeout(spark, slow, 3)
         assert time.time() - t0 < 40  # cancelled, not run to completion
+        # no zombie tasks left behind: a trivial action gets the cores
+        t1 = time.time()
+        assert spark.range(10).count() == 10
+        assert time.time() - t1 < 15
 
     def test_errors_propagate(self, spark):
         import pytest
