@@ -18,11 +18,15 @@ Overlap-gate semantics match ``_check_existing_data``
   (no time dimension, ``:470-529``).
 - Any overlap rejects the WHOLE batch (``:173-177``).
 
-Scale: the gate never collects entity lists to the driver (the
-reference ships ``ANY(array)`` literals; at 100 TB those are
-million-element IN-lists). Entities travel as a distinct-projected
-DataFrame through a semi-join — broadcast when small, shuffled
-hash-join otherwise, Catalyst's call.
+Scale: below the session's broadcast bar the gate ships the batch's
+keys and time bounds as literals, like the reference's ``ANY(array)``
+parameters: one bounded job summarizes the batch per key, and the
+warehouse probe's ``IN`` / ``BETWEEN`` predicates reach the parquet
+scan, whose row-group statistics and dictionaries skip what cannot
+match. Over the bar (at 100 TB the key lists would be million-element
+literals) or with the bar at -1, the keys travel as a
+distinct-projected DataFrame through a semi-join instead — the
+planner broadcasts it when small and shuffle-joins it otherwise.
 """
 
 from __future__ import annotations
@@ -31,6 +35,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..operators.scale import driver_rows
 
 
 @dataclass
@@ -83,6 +90,70 @@ def _overlapping_rows(
     return out
 
 
+def _literal_hits(
+    existing: DataFrame,
+    incoming: DataFrame,
+    entity_col: str,
+    extra_col: str | None,
+    time_col: str | None,
+    tolerance: str,
+) -> DataFrame | None:
+    """:func:`_overlapping_rows` with the batch's keys and time bounds
+    as literals, or None when they do not fit on the driver.
+
+    One job collects ``groupBy(keys).agg(min(t), max(t))``, bounded by
+    the :func:`~..operators.scale.driver_rows` cap of that summary.
+    The warehouse is then filtered by ``entity IN (...) AND extra IN
+    (...) AND t BETWEEN lo - tol AND hi + tol``: no join, and every
+    conjunct is pushed into the scan. LTZ bounds travel as epoch
+    micros and NTZ bounds as wall times, so no literal passes through
+    the driver's time zone. Columns typed differently on the two
+    sides, or a time column that is not a timestamp, keep the
+    semi-join, whose comparisons coerce differently.
+    """
+    keys = [c for c in (entity_col, extra_col) if c]
+    types = {f.name: f.dataType for f in incoming.schema}
+    stored = {f.name: f.dataType for f in existing.schema}
+    if any(stored.get(c) != types[c] for c in keys + [time_col] if c):
+        return None
+    if time_col is None:
+        summary = incoming.select(*keys).distinct()
+    elif isinstance(types[time_col], (T.TimestampType, T.TimestampNTZType)):
+        ltz = isinstance(types[time_col], T.TimestampType)
+        bound = F.unix_micros if ltz else (lambda c: c)
+        summary = incoming.groupBy(*keys).agg(
+            bound(F.min(time_col)).alias("lo"), bound(F.max(time_col)).alias("hi")
+        )
+    else:
+        return None
+    cap = driver_rows(summary)
+    if not cap:
+        return None
+    rows = summary.limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
+    pred = F.lit(True)
+    for c in keys:  # an empty IN list is false: nothing to probe
+        pred &= F.col(c).isin(sorted({r[c] for r in rows} - {None}))
+    if time_col is not None:
+        los = [r["lo"] for r in rows if r["lo"] is not None]
+        his = [r["hi"] for r in rows if r["hi"] is not None]
+        sql = (
+            (lambda v: f"timestamp_micros({v})")
+            if ltz
+            else (lambda v: f"TIMESTAMP_NTZ '{v.isoformat(' ')}'")
+        )
+        pred &= (
+            F.col(time_col).between(
+                F.expr(f"{sql(min(los))} - INTERVAL {tolerance}"),
+                F.expr(f"{sql(max(his))} + INTERVAL {tolerance}"),
+            )
+            if los
+            else F.lit(False)  # no time in the batch: nothing overlaps
+        )
+    return existing.where(pred)
+
+
 def check_data_overlap(
     existing: DataFrame | None,
     incoming: DataFrame,
@@ -92,10 +163,14 @@ def check_data_overlap(
     """J1/J2: the idempotence gate. ``existing=None`` (first load)
     never overlaps.
 
-    One Spark job: the overlapping-row set is aggregated to
-    (min, max, collect_set(entity)) — a single scalar row back to the
-    driver, like the reference's ``json_build_object`` summary
-    (``data_loader.py:400-425``).
+    The overlapping-row set is aggregated to (min, max,
+    collect_set(entity)) — a single scalar row back to the driver,
+    like the reference's ``json_build_object`` summary
+    (``data_loader.py:400-425``). Below the broadcast bar the rows
+    come from :func:`_literal_hits` (a summary job over the batch,
+    then a literal-predicate scan of the warehouse: at most four jobs
+    per verdict); over it, or when the batch's key summary exceeds
+    its cap, from the semi-joins of :func:`_overlapping_rows`.
     """
     spec = _TABLE_SPECS.get(table_type)
     if spec is None:
@@ -106,14 +181,10 @@ def check_data_overlap(
     if existing is None:
         return OverlapResult(False)
 
-    hits = _overlapping_rows(
-        existing,
-        incoming,
-        spec["entity_col"],
-        spec["extra_col"],
-        spec["time_col"],
-        tolerance,
-    )
+    args = (spec["entity_col"], spec["extra_col"], spec["time_col"], tolerance)
+    hits = _literal_hits(existing, incoming, *args)
+    if hits is None:
+        hits = _overlapping_rows(existing, incoming, *args)
     if spec["time_col"] is None:
         row = hits.agg(
             F.sort_array(F.collect_set(spec["entity_col"])).alias("ents")

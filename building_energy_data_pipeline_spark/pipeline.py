@@ -136,9 +136,8 @@ class Pipeline:
     def _emit_schema(self, df: DataFrame, source: str, table: str) -> str:
         """§3.1 step 2: sample-profile the source and freeze the DDL
         to ``{table}_schema.sql`` (``schema_analysis_orchestrator.py:
-        41-106``)."""
-        sample = df.limit(10_000)
-        ddl = generate_ddl(profile_columns(sample), source, table_name=table)
+        41-106``); the profiler bounds its own sample."""
+        ddl = generate_ddl(profile_columns(df), source, table_name=table)
         out = os.path.join(self.schemas_dir, f"{table}_schema.sql")
         with open(out, "w") as fh:
             fh.write(ddl)

@@ -1,14 +1,12 @@
 """Column profiling (SURVEY §2.9 T11, §2.4 A4/A9) — the reference's
 ``analyze_schema`` (``src/schema_generator/schema_analyzer.py:24-102``)
-as ONE Spark aggregation pass.
+as ONE Spark aggregation job.
 
 The reference computes count / null_count / unique_count /
 unique_ratio, uniqueness & monotonicity flags, and 5 sample values
-per column from a 10 k-row pandas sample. Here the stats for ALL
-columns are a single ``agg`` over the (sampled) DataFrame — at 100 TB
-the profile runs on ``sampling.random_sample`` output by design, but
-nothing below breaks if handed the full table: it is still one
-map-side-combined pass plus one small distinct-sample job per column.
+per column from a 10 k-row pandas sample; here all of it, for ALL
+columns, is a single ``agg`` over a :data:`SAMPLE_ROWS`-row ``limit``,
+so its per-column value sets stay bounded whatever the input size.
 """
 
 from __future__ import annotations
@@ -47,21 +45,30 @@ def _kind(dt: T.DataType) -> str:
     return "string"
 
 
+#: Rows profiled per call: the reference analyzer's sample size
+#: (``schema_analyzer.py:35``), and the bound on every value set below.
+SAMPLE_ROWS = 10_000
+
+
 def profile_columns(
     df: DataFrame, sample_values: int = 5
 ) -> list[ColumnInfo]:
-    """T11: per-column type inference + stats + recommendations.
-
-    One wide ``agg`` computes every stat for every column
-    (A4's single-pass idiom); only the 5 sample values need one extra
-    tiny job per column (bounded by ``limit``).
+    """T11: per-column type inference + stats + recommendations over
+    ``df.limit(SAMPLE_ROWS)``, in one wide ``agg`` (A4's single-pass
+    idiom). A distinct count is the size of
+    ``array_distinct(collect_set(c))``: equal to ``countDistinct``
+    (``array_distinct`` folds the NaNs ``collect_set`` keeps apart),
+    without the ``Expand`` several ``countDistinct`` aggregates plan.
     """
+    sample = df.limit(SAMPLE_ROWS)
     fields = df.schema.fields
     aggs: list = [F.count(F.lit(1)).alias("__total")]
     for i, f in enumerate(fields):
         c, k = F.col(f.name), _kind(f.dataType)
+        values = F.array_distinct(F.collect_set(c))
         aggs.append(F.count(c).alias(f"c{i}_count"))
-        aggs.append(F.countDistinct(c).alias(f"c{i}_distinct"))
+        aggs.append(F.size(values).alias(f"c{i}_distinct"))
+        aggs.append(F.slice(values, 1, sample_values).alias(f"c{i}_samples"))
         if k == "numeric":
             aggs.append(F.min(c.cast("double")).alias(f"c{i}_min"))
             aggs.append(F.max(c.cast("double")).alias(f"c{i}_max"))
@@ -76,7 +83,7 @@ def profile_columns(
             aggs.append(F.max(F.length(frac)).alias(f"c{i}_dec"))
         elif k == "string":
             aggs.append(F.max(F.length(c)).alias(f"c{i}_len"))
-    row = df.agg(*aggs).first()
+    row = sample.agg(*aggs).first()
     total = row["__total"]
 
     out: list[ColumnInfo] = []
@@ -98,14 +105,6 @@ def profile_columns(
             max_str_len=(row[f"c{i}_len"] or 0) if k == "string" else 0,
             has_tz=isinstance(f.dataType, T.TimestampType),
         )
-        samples = [
-            r[0]
-            for r in df.select(f.name)
-            .where(F.col(f.name).isNotNull())
-            .distinct()
-            .limit(sample_values)
-            .collect()
-        ]
         null_count = total - count
         is_unique = distinct == total
         unique_ratio = distinct / total if total else 0
@@ -126,7 +125,7 @@ def profile_columns(
                     "unique_count": distinct,
                     "unique_ratio": unique_ratio,
                 },
-                sample_values=samples,
+                sample_values=row[f"c{i}_samples"],
                 metadata={
                     "is_unique": is_unique,
                     "contains_nulls": null_count > 0,

@@ -34,6 +34,13 @@ def get_spark(
     spark-submit; everything set here is cluster-size agnostic.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Python workers (UDFs, data sources) import this package by name,
+    # and a driver that reached it through its own sys.path does not
+    # pass that on: append the package root after any PYTHONPATH set
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if root not in paths:
+        paths.append(root)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -82,6 +89,7 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(paths))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

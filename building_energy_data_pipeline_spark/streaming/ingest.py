@@ -158,7 +158,6 @@ def write_stream_idempotent(
     the warehouse, not its history; ``partition_by`` layout makes
     that slice partition-pruned.
     """
-    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as _F
 
     keys = list(unique_keys)
@@ -166,13 +165,13 @@ def write_stream_idempotent(
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates(keys)
-        try:
-            # Spark-side probe — os.path checks are driver-local and
-            # blind to hdfs:// / s3a:// warehouses
-            existing = spark.read.parquet(path)
-        except AnalysisException:
-            existing = None
-        if existing is not None:
+        # a missing sink is empty: ask its Hadoop FileSystem (os.path
+        # is driver-local and blind to hdfs:// / s3a://), and read an
+        # existing one with the batch's schema — no footer inference
+        sink = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+        conf = spark._jsparkSession.sessionState().newHadoopConf()  # noqa: SLF001
+        if sink.getFileSystem(conf).exists(sink):
+            existing = spark.read.schema(batch_df.schema).parquet(path)
             ts_col = next(
                 (k for k in keys if k in ("timestamp", "ts")), None
             )

@@ -6,6 +6,7 @@ table from ``src/data_loading/data_loader.py:334-529``.
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pandas as pd
 import pytest
@@ -22,7 +23,9 @@ from building_energy_data_pipeline_spark.etl import (
     validate_unique,
     write_idempotent,
 )
+from building_energy_data_pipeline_spark.operators.scale import local_frame
 from building_energy_data_pipeline_spark.sources.readers import find_sources
+from conftest import jobs_run
 
 
 @pytest.fixture()
@@ -280,6 +283,218 @@ class TestOverlapGateMetadata:
         assert res.has_overlap is True and res.overlap_range is None
         assert res.affected_entities == ["b1"]
         assert check_data_overlap(existing, miss, "metadata").has_overlap is False
+
+
+T0 = 1451606400 * 10**6  # 2016-01-01 00:00:00 UTC in epoch micros
+HOUR = 3600 * 10**6
+DEFAULT_BAR = "10485760"
+
+
+def _gate_rows(spark, rows, ntz=False):
+    """``(epoch micros, building_id, meter)`` rows as a driver-held raw
+    table: sized exactly, so the gate's literal path can take it, and
+    built from micros, so no value passes through the driver's zone."""
+    t = F.expr("timestamp_micros(us)")
+    return local_frame(
+        spark, rows, "us long, building_id string, meter string"
+    ).select(
+        (t.cast("timestamp_ntz") if ntz else t).alias("timestamp"),
+        "building_id",
+        "meter",
+        F.lit(1.0).alias("meter_reading"),
+    )
+
+
+#: b1 has electricity at T0 and T0+1h and gas at T0+2h; b2 and a
+#: null building have electricity at T0
+GATE_EXISTING = [
+    (T0, "b1", "electricity"),
+    (T0 + HOUR, "b1", "electricity"),
+    (T0 + 2 * HOUR, "b1", "gas"),
+    (T0, "b2", "electricity"),
+    (T0, None, "electricity"),
+]
+
+
+class TestOverlapGatePaths:
+    """Every verdict is identical on the literal path (default bar)
+    and on the semi-join path (bar -1)."""
+
+    @pytest.fixture()
+    def both_paths(self, spark, monkeypatch):
+        from building_energy_data_pipeline_spark.etl import loader
+
+        calls = []
+        semi = loader._overlapping_rows
+        monkeypatch.setattr(
+            loader, "_overlapping_rows", lambda *a: calls.append(a) or semi(*a)
+        )
+        key = "spark.sql.autoBroadcastJoinThreshold"
+
+        def run(existing, incoming, table="raw"):
+            out, old = {}, spark.conf.get(key)
+            for bar in (DEFAULT_BAR, "-1"):
+                calls.clear()
+                spark.conf.set(key, bar)
+                try:
+                    out[bar] = check_data_overlap(existing, incoming, table)
+                finally:
+                    spark.conf.set(key, old)
+                assert bool(calls) == (bar == "-1"), f"bar {bar}: {calls}"
+            assert out[DEFAULT_BAR] == out["-1"]
+            return out["-1"]
+
+        return run
+
+    @pytest.fixture(params=["utc", "ny-session-kolkata-driver"])
+    def zones(self, spark, monkeypatch, request):
+        """The session's zone and the driver process's zone: a bound
+        that passed through either one would move the window."""
+        if request.param == "utc":
+            yield
+            return
+        key = "spark.sql.session.timeZone"
+        old = spark.conf.get(key)
+        monkeypatch.setenv("TZ", "Asia/Kolkata")
+        time.tzset()
+        spark.conf.set(key, "America/New_York")
+        yield
+        spark.conf.set(key, old)
+        monkeypatch.undo()
+        time.tzset()
+
+    @pytest.mark.parametrize("ntz", [False, True], ids=["ltz", "ntz"])
+    @pytest.mark.parametrize(
+        "t, building, hit",
+        [
+            # window [t - 1h, t + 1h] is inclusive at both ends
+            (T0 + 2 * HOUR, "b1", True),  # reaches b1 electricity at T0+1h
+            (T0 + 2 * HOUR + 1, "b1", False),  # 1 µs past it
+            (T0 - HOUR, "b2", True),  # reaches b2 at T0
+            (T0 - HOUR - 1, "b2", False),
+        ],
+        ids=["lo-exact", "lo-1us-past", "hi-exact", "hi-1us-past"],
+    )
+    def test_tolerance_edges(self, spark, both_paths, zones, ntz, t, building, hit):
+        res = both_paths(
+            _gate_rows(spark, GATE_EXISTING, ntz),
+            _gate_rows(spark, [(t, building, "electricity")], ntz),
+        )
+        assert res.has_overlap is hit
+        assert res.affected_entities == ([building] if hit else [])
+
+    def test_ntz_bounds_are_wall_times_in_a_dst_gap(self, spark, both_paths):
+        """2:00-3:00 on 2016-03-13 does not exist in New York: an NTZ
+        bound taken through the session zone would move by an hour."""
+
+        def rows(wall_time):
+            return local_frame(
+                spark, [(wall_time, "b1", "electricity")],
+                "s string, building_id string, meter string",
+            ).select(F.to_timestamp_ntz("s").alias("timestamp"), "building_id", "meter")
+
+        key = "spark.sql.session.timeZone"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "America/New_York")
+        try:
+            existing = rows("2016-03-13 03:40:00")
+            hit = both_paths(existing, rows("2016-03-13 02:40:00"))
+            miss = both_paths(existing, rows("2016-03-13 02:39:59"))
+        finally:
+            spark.conf.set(key, old)
+        assert hit.has_overlap is True and miss.has_overlap is False
+
+    def test_metadata_has_no_time_column(self, spark, both_paths):
+        def meta(ids):
+            return _gate_rows(spark, [(T0, b, "x") for b in ids]).select(
+                "building_id"
+            )
+
+        res = both_paths(meta(["b1", "b2", None]), meta(["b2", "b3", None]), "metadata")
+        assert res.has_overlap is True and res.affected_entities == ["b2"]
+        assert res.overlap_range is None
+        miss = both_paths(meta(["b1"]), meta(["b3"]), "metadata")
+        assert miss.has_overlap is False
+
+    def test_empty_batch(self, spark, both_paths):
+        res = both_paths(_gate_rows(spark, GATE_EXISTING), _gate_rows(spark, []))
+        assert res.has_overlap is False
+
+    def test_null_entities_widen_the_window_but_match_nothing(self, spark, both_paths):
+        # the null-building row at T0 stretches the batch's window
+        # down to T0-1h; b1's rows at T0 and T0+1h then collide
+        res = both_paths(
+            _gate_rows(spark, GATE_EXISTING),
+            _gate_rows(spark, [(T0 + 5 * HOUR, "b1", "electricity"), (T0, None, "electricity")]),
+        )
+        assert res.has_overlap is True and res.affected_entities == ["b1"]
+        t0, t1 = res.overlap_range
+        assert t1 - t0 == dt.timedelta(hours=1)
+
+    def test_overlap_inside_one_building(self, spark, both_paths):
+        res = both_paths(
+            _gate_rows(spark, GATE_EXISTING),
+            _gate_rows(spark, [(T0, "b1", "electricity"), (T0 + HOUR, "b1", "gas")]),
+        )
+        assert res.has_overlap is True and res.affected_entities == ["b1"]
+        t0, t1 = res.overlap_range
+        assert t1 - t0 == dt.timedelta(hours=2)
+        assert "building(s) b1 between" in res.overlap_details
+
+
+class TestLiteralProbe:
+    @pytest.fixture(scope="class")
+    def warehouse(self, spark, tmp_path_factory):
+        path = str(tmp_path_factory.mktemp("gate") / "raw")
+        _gate_rows(spark, GATE_EXISTING).write.parquet(path)
+        return path
+
+    def test_predicates_reach_the_scan_and_nothing_joins(self, spark, warehouse):
+        from building_energy_data_pipeline_spark.etl.loader import _literal_hits
+
+        batch = _gate_rows(
+            spark, [(T0, "b1", "electricity"), (T0, "b2", "gas")]
+        )
+        hits = _literal_hits(
+            spark.read.parquet(warehouse), batch,
+            "building_id", "meter", "timestamp", "1 HOUR",
+        )
+        plan = hits._jdf.queryExecution().executedPlan()
+        (scan,) = [
+            n for n in _plan_nodes(plan)
+            if n.getClass().getSimpleName() == "FileSourceScanExec"
+        ]
+        pushed = scan.metadata().get("PushedFilters").get()
+        for pred in (
+            "In(building_id, [b1,b2])",
+            "In(meter, [electricity,gas])",
+            "GreaterThanOrEqual(timestamp,",
+            "LessThanOrEqual(timestamp,",
+        ):
+            assert pred in pushed, pushed
+        names = [n.getClass().getSimpleName() for n in _plan_nodes(plan)]
+        assert not [c for c in names if "Join" in c or "Exchange" in c], names
+        assert sorted(r["building_id"] for r in hits.collect()) == ["b1", "b1", "b2"]
+
+    @pytest.mark.parametrize("t, hit", [(T0, True), (T0 + 9 * HOUR, False)])
+    def test_a_verdict_runs_four_jobs(self, spark, warehouse, t, hit):
+        existing = spark.read.parquet(warehouse)
+        batch = _gate_rows(spark, [(t, "b1", "electricity")])
+        res, jobs = jobs_run(
+            spark, lambda: check_data_overlap(existing, batch, "raw")
+        )
+        assert res.has_overlap is hit
+        assert 0 < jobs <= 4, f"gate verdict ran {jobs} jobs"
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, through AQE's wrapper."""
+    if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        node = node.executedPlan()
+    yield node
+    it = node.children().iterator()
+    while it.hasNext():
+        yield from _plan_nodes(it.next())
 
 
 # ---------------------------------------------------------------------------

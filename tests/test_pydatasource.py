@@ -6,7 +6,13 @@ surface q253 drives through the oracle harness.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
+from conftest import SF_DIR
 from pyspark.sql.datasource import (
     EqualTo,
     GreaterThanOrEqual,
@@ -635,3 +641,29 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
         for d in range(10)
         for t in range(4)
     )
+
+
+def test_workers_import_the_package_from_outside_the_checkout(tmp_path):
+    """A script that reaches the package only through its own
+    ``sys.path``, run from outside the checkout with ``PYTHONPATH``
+    unset: q253's data-source workers still import the package."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "q253.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from building_energy_data_pipeline_spark.plans.registry import REGISTRY
+        from building_energy_data_pipeline_spark.session import get_spark
+
+        spark = get_spark(master="local[2]", shuffle_partitions=2)
+        q = REGISTRY["q253_python_datasource_scan"]
+        print("rows", q.spark(spark, {SF_DIR!r}).count())
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "rows 5" in out.stdout

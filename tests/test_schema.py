@@ -6,11 +6,14 @@ sampling strategies, DDL text, schema diff.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import jobs_run
+from building_energy_data_pipeline_spark.schema import profiler
 from building_energy_data_pipeline_spark.schema import (
     ColumnProfile,
     derive_table_name,
@@ -143,6 +146,62 @@ class TestProfiler:
 
         assert infos["empty"].data_type == "TEXT"
 
+    def test_distinct_counts_equal_count_distinct(self, spark):
+        """NaN, -0.0 and nulls over three partitions: the one-job
+        distinct count is ``countDistinct``'s, not ``collect_set``'s
+        (which keeps one NaN per partition)."""
+        nan, inf = float("nan"), float("inf")
+        vals = [0.0, -0.0, nan, nan, None, 1.5, inf, -0.0, nan]
+        df = spark.createDataFrame(
+            [(v, v, i % 2 or None) for i, v in enumerate(vals)],
+            "d double, f float, n int",
+        ).repartition(3)
+        infos = {c.name: c for c in profile_columns(df)}
+        want = df.agg(*[F.countDistinct(c).alias(c) for c in df.columns]).first()
+        for c in df.columns:
+            assert infos[c].stats["unique_count"] == want[c], c
+        assert infos["d"].stats["unique_count"] == 4  # 0.0, NaN, 1.5, inf
+        assert infos["d"].stats["null_count"] == 1
+        samples = infos["d"].sample_values
+        assert len(samples) == 4 and sum(x != x for x in samples) == 1
+
+    def test_all_null_column_and_empty_frame(self, spark):
+        df = spark.createDataFrame(
+            [(1, None), (2, None)], "id long, gone double"
+        )
+        gone = {c.name: c for c in profile_columns(df)}["gone"]
+        assert gone.data_type == "TEXT" and gone.nullable is True
+        assert gone.stats == {
+            "count": 2, "null_count": 2, "unique_count": 0, "unique_ratio": 0.0
+        }
+        assert gone.sample_values == []
+        for info in profile_columns(df.limit(0)):
+            assert info.stats == {
+                "count": 0, "null_count": 0, "unique_count": 0, "unique_ratio": 0
+            }
+            assert info.sample_values == [] and info.nullable is False
+
+    def test_profiles_a_bounded_sample(self, spark):
+        df = spark.range(0, 15_000, 1, 3).select(
+            "id", (F.col("id") % 7).alias("grp")
+        )
+        assert profiler.SAMPLE_ROWS == 10_000
+        infos = {c.name: c for c in profile_columns(df)}
+        assert infos["id"].stats["count"] == 10_000
+        assert infos["id"].stats["unique_count"] == 10_000
+        assert infos["id"].metadata["is_unique"] is True
+        assert infos["grp"].stats["unique_count"] == 7
+        assert len(infos["id"].sample_values) == 5
+        assert len(set(infos["id"].sample_values)) == 5
+
+    def test_profile_is_one_aggregate(self, spark, tmp_path):
+        path = str(tmp_path / "raw")
+        bdg2_frames(spark)["raw"].write.parquet(path)
+        df = spark.read.parquet(path)
+        infos, jobs = jobs_run(spark, lambda: profile_columns(df))
+        assert len(infos) == 4
+        assert 0 < jobs <= 2, f"profile ran {jobs} jobs"
+
     def test_monotonicity(self, spark):
         df = spark.createDataFrame(
             [(1, 10), (2, 20), (3, 15)], "ord int, v int"
@@ -263,6 +322,54 @@ class TestSampling:
 # ---------------------------------------------------------------------------
 
 
+GOLDEN_DDL = os.path.join(os.path.dirname(__file__), "golden", "bdg2_ddl.sql")
+
+
+def bdg2_frames(spark):
+    """BDG2-shaped ``metadata``, melted ``raw`` meter and ``weather``
+    tables (12 buildings, 4 sites, 4 meters, 72 hours), built from
+    ``range`` ids so no value passes through the driver's zone."""
+
+    def pick(values, idx):
+        arr = F.array(*[F.lit(v) for v in values])
+        return F.element_at(arr, (idx % len(values) + 1).cast("int"))
+
+    sites = ["Panther", "Fox", "Rat", "Bear"]
+    uses = ["office", "lodging", "education", "parking", "public"]
+
+    def building(b):
+        return F.concat_ws(
+            "_", pick(sites, b % 4), pick(uses, b % 5), F.format_string("%04d", b)
+        )
+
+    id_ = F.col("id")
+    hour = F.expr("timestamp_seconds(1451606400 + (id % 72) * 3600)")
+    meta = spark.range(0, 12, 1, 2).select(
+        building(id_).alias("building_id"),
+        pick(sites, id_ % 4).alias("site_id"),
+        pick(uses, id_ % 5).alias("primaryspaceusage"),
+        (F.lit(1000.0) + id_ * 431).alias("sqm"),
+        F.when(id_ % 3 == 0, None).otherwise(F.lit(1950.0) + id_ * 4).alias("yearbuilt"),
+        F.when(id_ % 4 == 1, None).otherwise((id_ % 6 + 1).cast("int")).alias("numberoffloors"),
+    )
+    raw = spark.range(0, 4 * 12 * 72, 1, 3).select(
+        hour.alias("timestamp"),
+        building((id_ / 72).cast("long") % 12).alias("building_id"),
+        F.when(id_ % 17 == 0, None)
+        .otherwise(F.round((id_ * 37 % 1000) / 10 + 0.1, 1))
+        .alias("meter_reading"),
+        pick(["electricity", "chilledwater", "steam", "hotwater"], (id_ / 864).cast("long")).alias("meter"),
+    )
+    weather = spark.range(0, 4 * 72, 1, 2).select(
+        hour.alias("timestamp"),
+        pick(sites, (id_ / 72).cast("long")).alias("site_id"),
+        F.round((id_ * 13 % 400) / 10 - 12.5, 1).alias("airTemperature"),
+        F.when(id_ % 11 == 0, None).otherwise((id_ * 7 % 90) / 10).alias("windSpeed"),
+        F.lit(0).cast("int").alias("precipDepth1HR"),
+    )
+    return {"metadata": meta, "raw": raw, "weather": weather}
+
+
 class TestDDL:
     def test_table_name_derivation(self):
         # reference parametrized cases (test_schema_analysis_orchestrator.py)
@@ -282,6 +389,17 @@ class TestDDL:
         assert '"tag" VARCHAR(1) NOT NULL' in ddl
         assert "-- Column Information:" in ddl
         assert "Consider as primary key candidate" in ddl
+
+    def test_bdg2_ddl_golden(self, spark):
+        """The emitted DDL, byte for byte, for the three BDG2 table
+        shapes (``tests/golden/bdg2_ddl.sql``)."""
+        now = dt.datetime(2026, 1, 1, 12, 0, 0)
+        got = "\n\n".join(
+            generate_ddl(profile_columns(df), f"{name}.parquet", table_name=name, now=now)
+            for name, df in bdg2_frames(spark).items()
+        ) + "\n"
+        with open(GOLDEN_DDL) as fh:
+            assert got == fh.read()
 
     def test_primary_key_clause(self, spark):
         df = spark.createDataFrame([(1,)], "id long")

@@ -213,6 +213,56 @@ class TestStreamingIdempotentSink:
         assert spark.read.parquet(wh).count() == 5
 
 
+    def test_partitioned_sink_drops_rows_replayed_across_batches(
+        self, spark, tmp_path
+    ):
+        """The first batch finds no sink; the second reads the
+        ``meter``-partitioned sink with the batch's schema and drops
+        the rows the first one already wrote."""
+        import shutil
+
+        from building_energy_data_pipeline_spark.etl import validate_unique
+        from building_energy_data_pipeline_spark.streaming import (
+            write_stream_idempotent,
+        )
+
+        first = [
+            (T0, "b1", "electricity", 1.0),
+            (T0, "b1", "gas", 2.0),
+            (T0 + dt.timedelta(hours=1), "b2", "electricity", 3.0),
+        ]
+        second = first[1:] + [
+            (T0 + dt.timedelta(hours=2), "b1", "gas", 4.0),
+            (T0 + dt.timedelta(hours=2), "b3", "steam", 5.0),
+        ]
+        src = tmp_path / "in"
+        src.mkdir()
+        for i, rows in enumerate((first, second)):
+            out = str(tmp_path / f"f{i}")
+            spark.createDataFrame(
+                rows, "timestamp timestamp, building_id string, meter string, meter_reading double"
+            ).coalesce(1).write.parquet(out)
+            (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+            dst = str(src / f"{i}.parquet")
+            shutil.copy(os.path.join(out, part), dst)
+            os.utime(dst, (1_000_000 + i, 1_000_000 + i))  # read in order
+
+        wh = str(tmp_path / "wh" / "raw")
+        keys = ["timestamp", "building_id", "meter"]
+        q = write_stream_idempotent(
+            read_meter_stream(spark, str(src), max_files_per_trigger=1),
+            wh, "raw", keys, str(tmp_path / "ckpt"), partition_by=["meter"],
+        )
+        wait_drained(q)
+        assert len([p for p in q.recentProgress if p["numInputRows"]]) == 2
+        stored = spark.read.parquet(wh)
+        assert sorted(f for f in os.listdir(wh) if f.startswith("meter=")) == [
+            "meter=electricity", "meter=gas", "meter=steam"
+        ]
+        assert stored.count() == 5
+        assert validate_unique(stored, keys).count() == 0
+
+
 class TestTransformWithState:
     def test_v2_matches_batch_fold_when_available(self, spark, sf_dir):
         """transformWithStateInPandas twin of the q64 operator: runs
