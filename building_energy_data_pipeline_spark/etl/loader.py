@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -90,6 +90,41 @@ def _overlapping_rows(
     return out
 
 
+#: the time column types whose bounds can travel as literals
+TIMESTAMPS = (T.TimestampType, T.TimestampNTZType)
+
+
+def time_bounds(time_col: str, dtype: T.DataType) -> list[Column]:
+    """``[min(t) AS lo, max(t) AS hi]`` in the form a bound crosses to
+    the driver for :func:`time_window`: an LTZ bound as epoch micros,
+    so the collected value never meets the driver's time zone, an NTZ
+    bound as its wall time."""
+    wrap = F.unix_micros if isinstance(dtype, T.TimestampType) else (lambda c: c)
+    return [
+        wrap(F.min(time_col)).alias("lo"),
+        wrap(F.max(time_col)).alias("hi"),
+    ]
+
+
+def time_window(
+    time_col: str, dtype: T.DataType, lo, hi, tolerance: str
+) -> Column:
+    """``t BETWEEN lo - tolerance AND hi + tolerance`` with ``lo``/``hi``
+    collected through :func:`time_bounds` and rendered as literals —
+    ``timestamp_micros(n)`` for LTZ, ``TIMESTAMP_NTZ '...'`` for NTZ —
+    so neither the driver's nor the session's zone moves the window.
+    The tolerance interval is applied by Spark."""
+    sql = (
+        (lambda v: f"timestamp_micros({v})")
+        if isinstance(dtype, T.TimestampType)
+        else (lambda v: f"TIMESTAMP_NTZ '{v.isoformat(' ')}'")
+    )
+    return F.col(time_col).between(
+        F.expr(f"{sql(lo)} - INTERVAL {tolerance}"),
+        F.expr(f"{sql(hi)} + INTERVAL {tolerance}"),
+    )
+
+
 def _literal_hits(
     existing: DataFrame,
     incoming: DataFrame,
@@ -105,10 +140,10 @@ def _literal_hits(
     the :func:`~..operators.scale.driver_rows` cap of that summary.
     The warehouse is then filtered by ``entity IN (...) AND extra IN
     (...) AND t BETWEEN lo - tol AND hi + tol``: no join, and every
-    conjunct is pushed into the scan. LTZ bounds travel as epoch
-    micros and NTZ bounds as wall times, so no literal passes through
-    the driver's time zone. Columns typed differently on the two
-    sides, or a time column that is not a timestamp, keep the
+    conjunct is pushed into the scan. The time bounds go through
+    :func:`time_bounds` and :func:`time_window`, so no literal passes
+    through the driver's time zone. Columns typed differently on the
+    two sides, or a time column that is not a timestamp, keep the
     semi-join, whose comparisons coerce differently.
     """
     keys = [c for c in (entity_col, extra_col) if c]
@@ -118,11 +153,9 @@ def _literal_hits(
         return None
     if time_col is None:
         summary = incoming.select(*keys).distinct()
-    elif isinstance(types[time_col], (T.TimestampType, T.TimestampNTZType)):
-        ltz = isinstance(types[time_col], T.TimestampType)
-        bound = F.unix_micros if ltz else (lambda c: c)
+    elif isinstance(types[time_col], TIMESTAMPS):
         summary = incoming.groupBy(*keys).agg(
-            bound(F.min(time_col)).alias("lo"), bound(F.max(time_col)).alias("hi")
+            *time_bounds(time_col, types[time_col])
         )
     else:
         return None
@@ -138,15 +171,9 @@ def _literal_hits(
     if time_col is not None:
         los = [r["lo"] for r in rows if r["lo"] is not None]
         his = [r["hi"] for r in rows if r["hi"] is not None]
-        sql = (
-            (lambda v: f"timestamp_micros({v})")
-            if ltz
-            else (lambda v: f"TIMESTAMP_NTZ '{v.isoformat(' ')}'")
-        )
         pred &= (
-            F.col(time_col).between(
-                F.expr(f"{sql(min(los))} - INTERVAL {tolerance}"),
-                F.expr(f"{sql(max(his))} + INTERVAL {tolerance}"),
+            time_window(
+                time_col, types[time_col], min(los), max(his), tolerance
             )
             if los
             else F.lit(False)  # no time in the batch: nothing overlaps

@@ -8,18 +8,18 @@ extensions a 100 TB corpus needs.
 
 Design for scale
 ----------------
-- Signatures are computed with **higher-order array functions**
-  (``transform``/``aggregate``/``array_min``) in one narrow
-  projection: no explode, no shuffle, no Python — the per-document
-  cost is bounded by token count and stays inside whole-stage codegen.
+- Signatures hash each shingle ONCE, as a top-level codegen'd
+  projection over the exploded shingles, and fold the per-hash minima
+  in one groupBy whose required distribution a pre-explode
+  repartition already satisfies — the only shuffle in the signature
+  job moves the compact per-document rows.
 - The only shuffle in the LSH path is the band-bucket self-join, whose
   key (``band#``) is uniform by construction; AQE handles residual
   skew from degenerate corpora (e.g. millions of empty documents).
 - Candidate verification joins back to the shingle sets **after** the
   bucket join has cut the pair space from O(n²) to near-linear.
-- Hashes are md5-based for DuckDB-oracle portability
-  (``functions/hashing.py``); pass ``portable=False`` to swap in
-  ``xxhash64`` at identical plan shape for production throughput.
+- Hashes are the engine's md5 convention (``functions/hashing.py``),
+  so every DuckDB twin here replays the exact values.
 """
 
 from __future__ import annotations
@@ -27,21 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import spark_hash32, spark_xxhash32
+from ..functions.hashing import duck_u32, spark_u32
 
 # defaults sized for near-dup detection at Jaccard ≥ ~0.5
 NUM_HASHES = 16
 BANDS = 4  # 4 rows/band → s-curve threshold ≈ (1/4)^(1/4) ≈ 0.71
-
-
-def _hash_lambda(portable: bool) -> str:
-    """Hash-of-``x`` with lambda-variable seed ``s`` (SQL fragment)."""
-    if portable:
-        return (
-            "cast(conv(substring(md5(concat(x, ':', cast(s as string))), 1, 8),"
-            " 16, 10) as bigint)"
-        )
-    return "(xxhash64(concat(x, ':', cast(s as string))) & 4294967295)"
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +102,6 @@ def minhash_signatures(
     k: int = 3,
     num_hashes: int = NUM_HASHES,
     bands: int = BANDS,
-    portable: bool = True,
 ) -> DataFrame:
     """Per-document MinHash signature and LSH band keys.
 
@@ -126,24 +115,17 @@ def minhash_signatures(
     affine combination ``(h1 + s·h2) mod 2³²`` — integer ops only, so
     the crypto cost is O(|shingles|) not O(|shingles|·num_hashes).
 
-    Two physical strategies, same logical output:
-
-    - ``portable=True`` (md5, DuckDB-comparable): **explode +
-      groupBy**. Spark evaluates lambda bodies of higher-order
-      functions interpreted (no whole-stage codegen), and md5 is
-      expensive enough that the interpreted penalty dominates —
-      measured 3.7× slower than running md5 as a top-level codegen'd
-      projection over exploded shingles. The documents are
-      repartitioned by ``id_col`` BEFORE the explode: that (a) frees
-      the hash stage from the input's row-group parallelism (a single
-      giant row group would otherwise hash on one task), and (b)
-      satisfies the groupBy's required distribution, so the explode →
-      md5 → aggregate chain runs exchange-free — the only shuffle in
-      the whole signature job moves the compact pre-explode rows.
-    - ``portable=False`` (xxhash64, production): pure higher-order
-      array expressions in one narrow projection — **zero shuffle**.
-      xxhash64 is cheap enough that the interpreted HOF path wins by
-      staying shuffle-free.
+    Physical strategy: **explode + groupBy**. Spark evaluates lambda
+    bodies of higher-order functions interpreted (no whole-stage
+    codegen), and md5 is expensive enough that the interpreted penalty
+    dominates — measured 3.7× slower than running md5 as a top-level
+    codegen'd projection over exploded shingles. The documents are
+    repartitioned by ``id_col`` BEFORE the explode: that (a) frees the
+    hash stage from the input's row-group parallelism (a single giant
+    row group would otherwise hash on one task), and (b) satisfies the
+    groupBy's required distribution, so the explode → md5 → aggregate
+    chain runs exchange-free — the only shuffle in the whole signature
+    job moves the compact pre-explode rows.
     """
     assert num_hashes % bands == 0
     rows = num_hashes // bands
@@ -157,53 +139,37 @@ def minhash_signatures(
     base = df.select(F.col(id_col), F.expr(tokens_expr).alias("__toks")).select(
         F.col(id_col), F.expr(sh).alias("shingles")
     )
-    if portable:
-        # explode_outer, not explode: plain explode lets
-        # InferFiltersFromGenerate push a size()>0 filter into the
-        # scan with the whole shingle expression tree inlined
-        # (double-computing it); shingles has ≥1 element by
-        # construction so outer semantics are identical.
-        # explicit partition count: a bare repartition(col) is
-        # AQE-coalesced by shuffle-read *bytes*, which under-provisions
-        # this CPU-bound (md5-per-shingle) stage — a few MB of compact
-        # docs can explode into seconds of hashing on one core.
-        n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex = base.repartition(n_part, F.col(id_col)).select(
-            id_col, F.explode_outer("shingles").alias("x")
-        ).select(
-            id_col,
-            "x",
-            F.expr("cast(conv(substring(md5(x), 1, 8), 16, 10) as bigint)").alias("h1"),
-            F.expr("cast(conv(substring(md5(x), 9, 8), 16, 10) as bigint)").alias("h2"),
-        )
-        mins = [
-            F.min(F.expr(f"(h1 + {s} * h2) % 4294967296")).alias(f"__m{s}")
-            for s in range(num_hashes)
-        ]
-        return (
-            ex.groupBy(id_col)
-            .agg(*mins, F.collect_list("x").alias("shingles"))
-            .select(
-                id_col,
-                "shingles",
-                F.array(*[f"__m{s}" for s in range(num_hashes)]).alias("sig"),
-            )
-            .withColumn("band_keys", F.expr(band_keys))
-        )
-    h1s = "transform(hs, m -> m & 4294967295)"
-    h2s = "transform(hs, m -> shiftright(m, 32) & 4294967295)"
-    sig = (
-        f"transform(sequence(0, {num_hashes - 1}),"
-        f" s -> array_min(zip_with(h1s, h2s,"
-        f" (a, b) -> (a + s * b) % 4294967296)))"
+    # explode_outer, not explode: plain explode lets
+    # InferFiltersFromGenerate push a size()>0 filter into the
+    # scan with the whole shingle expression tree inlined
+    # (double-computing it); shingles has ≥1 element by
+    # construction so outer semantics are identical.
+    # explicit partition count: a bare repartition(col) is
+    # AQE-coalesced by shuffle-read *bytes*, which under-provisions
+    # this CPU-bound (md5-per-shingle) stage — a few MB of compact
+    # docs can explode into seconds of hashing on one core.
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ex = base.repartition(n_part, F.col(id_col)).select(
+        id_col, F.explode_outer("shingles").alias("x")
+    ).select(
+        id_col,
+        "x",
+        F.expr(spark_u32("x")).alias("h1"),
+        F.expr(spark_u32("x", half=1)).alias("h2"),
     )
+    mins = [
+        F.min(F.expr(f"(h1 + {s} * h2) % 4294967296")).alias(f"__m{s}")
+        for s in range(num_hashes)
+    ]
     return (
-        base.withColumn("hs", F.expr("transform(shingles, x -> xxhash64(x))"))
-        .withColumn("h1s", F.expr(h1s))
-        .withColumn("h2s", F.expr(h2s))
-        .withColumn("sig", F.expr(sig))
+        ex.groupBy(id_col)
+        .agg(*mins, F.collect_list("x").alias("shingles"))
+        .select(
+            id_col,
+            "shingles",
+            F.array(*[f"__m{s}" for s in range(num_hashes)]).alias("sig"),
+        )
         .withColumn("band_keys", F.expr(band_keys))
-        .drop("hs", "h1s", "h2s")
     )
 
 
@@ -213,13 +179,12 @@ def duck_minhash_sql(
     num_hashes: int = NUM_HASHES,
     bands: int = BANDS,
 ) -> dict[str, str]:
-    """DuckDB twins of :func:`minhash_signatures` (portable mode),
-    keyed by output column; ``sig`` references the ``shingles`` alias
-    and ``band_keys`` the ``sig`` alias (compose with nested selects).
+    """DuckDB twins of :func:`minhash_signatures`, keyed by output
+    column; ``sig`` references the ``shingles`` alias and
+    ``band_keys`` the ``sig`` alias (compose with nested selects).
     """
     rows = num_hashes // bands
-    h1 = "CAST(concat('0x', substring(md5(x), 1, 8)) AS BIGINT)"
-    h2 = "CAST(concat('0x', substring(md5(x), 9, 8)) AS BIGINT)"
+    h1, h2 = duck_u32("x"), duck_u32("x", half=1)
     return {
         "shingles": duck_shingles_sql(tokens_sql, k),
         "sig": (
@@ -502,7 +467,6 @@ def simhash(
     df: DataFrame,
     id_col: str,
     tokens_expr: str,
-    portable: bool = True,
 ) -> DataFrame:
     """32-bit SimHash over the distinct token set (unit weights).
 
@@ -510,7 +474,7 @@ def simhash(
     is the sign of the per-bit ±1 vote sum — all higher-order array
     expressions, no shuffle, no Python.
     """
-    h = _hash_lambda(portable).replace("cast(s as string)", "'0'")
+    h = spark_u32("x", salt=0)
     th = f"transform(array_distinct({tokens_expr}), x -> {h})"
     sh = (
         f"aggregate(sequence(0, {SIMHASH_BITS - 1}), 0L, (acc, i) -> acc +"
@@ -526,7 +490,7 @@ def simhash(
 
 
 def duck_simhash_sql(tokens_sql: str) -> str:
-    """DuckDB twin of :func:`simhash` (portable mode); references a
+    """DuckDB twin of :func:`simhash`; references a
     ``th`` alias holding the token-hash list."""
     return (
         f"CAST(list_sum(list_transform(range(0, {SIMHASH_BITS}), i ->"
@@ -536,7 +500,9 @@ def duck_simhash_sql(tokens_sql: str) -> str:
     )
 
 
-DUCK_TOKEN_HASHES = (
-    "list_transform(list_distinct({tokens}), x ->"
-    " CAST(concat('0x', substring(md5(concat(x, ':', '0')), 1, 8)) AS BIGINT))"
-)
+def duck_token_hashes_sql(tokens_sql: str) -> str:
+    """DuckDB twin of :func:`simhash`'s ``th`` token-hash list."""
+    return (
+        f"list_transform(list_distinct({tokens_sql}),"
+        f" x -> {duck_u32('x', salt=0)})"
+    )

@@ -10,10 +10,8 @@ d·w integers — the shape that merges across streams/partitions by
 plain addition, so it drops into `foreachBatch` maintenance
 (q126's pattern) unchanged.
 
-Hashes are the repo's portable md5 convention (Spark ``conv(substr
-(md5(...)))`` ≡ DuckDB ``concat('0x', substring(md5(...)))`` hex
-cast — ``operators/dedup.py:176-221``), so the DuckDB twins replay
-the exact grid.
+Hashes are the engine's md5 convention (``functions/hashing.py``), so
+the DuckDB twins replay the exact grid.
 
 Scale: the build explodes each token to its d (row, bucket) cells,
 but partial aggregation collapses every task's contribution to at
@@ -26,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duck_u32, spark_u32
+
 #: default grid: 4 rows × 256 buckets (ε ≈ e/256, δ ≈ 2⁻⁴)
 CMS_D = 4
 CMS_W = 256
@@ -33,20 +33,13 @@ CMS_W = 256
 
 def _bucket_expr(token_expr: str, row_expr: str, w: int) -> str:
     """Spark SQL: md5-derived bucket of ``token_expr`` under hash row
-    ``row_expr`` (independent rows via the salt-concat convention)."""
-    return (
-        f"cast(conv(substring(md5(concat({token_expr}, ':',"
-        f" cast({row_expr} as string))), 1, 8), 16, 10) as bigint)"
-        f" % {w}"
-    )
+    ``row_expr`` (independent rows via the hash salt)."""
+    return f"{spark_u32(token_expr, salt=row_expr)} % {w}"
 
 
 def duck_bucket_sql(token_expr: str, row_expr: str, w: int) -> str:
-    """DuckDB twin of :func:`_bucket_expr` (identical md5 bytes)."""
-    return (
-        f"CAST(concat('0x', substring(md5(concat({token_expr}, ':',"
-        f" CAST({row_expr} AS VARCHAR))), 1, 8)) AS BIGINT) % {w}"
-    )
+    """DuckDB twin of :func:`_bucket_expr`."""
+    return f"{duck_u32(token_expr, salt=row_expr)} % {w}"
 
 
 def countmin_build(
@@ -178,16 +171,12 @@ def hll_registers(
     bounds every task's exchange contribution at groups·m rows no
     matter the stream size.
 
-    Hashes follow the repo's portable md5 convention
-    (``operators/dedup.py:176-221``) so DuckDB replays the exact
-    register state.
+    Hashes follow the engine's md5 convention (``functions/hashing.py``)
+    so DuckDB replays the exact register state.
     """
     g = group_cols or []
-    bucket = (
-        f"cast(conv(substring(md5({value_col}), 1, 8), 16, 10)"
-        f" as bigint) % {HLL_M}"
-    )
-    v32 = f"cast(conv(substring(md5({value_col}), 9, 8), 16, 10) as bigint)"
+    bucket = f"{spark_u32(value_col)} % {HLL_M}"
+    v32 = spark_u32(value_col, half=1)
     rho = (
         f"case when {v32} = 0 then {_HLL_RHO_BITS}"
         f" else {_HLL_RHO_BITS} - length(bin({v32})) end"
@@ -247,13 +236,12 @@ def duck_hll_sql(stream_sql: str, group_col: str) -> str:
     points, integer-safe)."""
     m, bits, pw = HLL_M, _HLL_RHO_BITS, _HLL_POW
     alpha = HLL_ALPHA  # one source for the bias constant (m-dependent)
-    v32 = "CAST(concat('0x', substring(md5(tok), 9, 8)) AS BIGINT)"
+    v32 = duck_u32("tok", half=1)
     return f"""
     WITH stream AS ({stream_sql}),
     slices AS (
       SELECT {group_col} AS g,
-             CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT)
-               % {m} AS bucket,
+             {duck_u32("tok")} % {m} AS bucket,
              CASE WHEN {v32} = 0 THEN {bits}
                   ELSE {bits} - length(bin({v32})) END AS rho
       FROM stream),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duck_u32, spark_u32
+
 # ---------------------------------------------------------------------------
 # Tokenization (shared substrate)
 # ---------------------------------------------------------------------------
@@ -481,7 +483,7 @@ def cdc_chunk_exprs(
     """
     n = f"length({text_col})"
     win = f"substring({text_col}, i - {k - 1}, {k})"
-    h = f"cast(conv(substring(md5({win}), 1, 8), 16, 10) as bigint)"
+    h = spark_u32(win)
     hits = (
         f"case when {n} >= {k}"
         f" then filter(sequence({k}, {n}), i -> {h} % {d} = 0)"
@@ -501,7 +503,7 @@ def duck_cdc_chunks_sql(
     identical md5 bytes, identical boundary set."""
     n = f"length({text_col})"
     win = f"{text_col}[i - {k - 1}:i]"
-    h = f"CAST(concat('0x', substring(md5({win}), 1, 8)) AS BIGINT)"
+    h = duck_u32(win)
     return f"""
     WITH docs AS ({docs_sql}),
     bset AS (

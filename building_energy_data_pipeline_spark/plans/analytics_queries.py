@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duck_u32, py_u32
 from ..sources.readers import load_table
 from .registry import query
 
@@ -634,12 +635,13 @@ def q175_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Signed-random-projection LSH over embeddings — q176
 # ---------------------------------------------------------------------------
 
-#: ±1 projection entry for (bit j, dim d): parity of md5("j:d") —
-#: derived ONCE here (hashlib md5 ≡ both engines' md5 on the same
-#: bytes) and inlined as literal constants in BOTH engines' texts,
-#: because evaluating the md5 INSIDE the projection lambda re-hashed
-#: all bits×dims pairs per vector (~10M md5 calls at sf0.1 —
-#: measured as the whole suite's slowest entry, 5.6 s). With the
+#: ±1 projection entry for (bit j, dim d): parity of the engine hash
+#: of "j" salted by d (md5("j:d")) — derived ONCE here (``py_u32`` ≡
+#: both engines' ``spark_u32``/``duck_u32``) and inlined as literal
+#: constants in BOTH engines' texts, because evaluating the md5
+#: INSIDE the projection lambda re-hashed all bits×dims pairs per
+#: vector (~10M md5 calls at sf0.1 — measured as the whole suite's
+#: slowest entry, 5.6 s). With the
 #: constants inlined the projection unrolls to flat arithmetic that
 #: whole-stage codegen compiles — no interpreted lambda at all.
 _SRP_BITS = 8
@@ -647,10 +649,7 @@ _SRP_DIM = 64  # embeddings are fixed 64-d (TESTDATA.md)
 
 
 def _srp_sign(j: int, d: int) -> float:
-    import hashlib
-
-    h = hashlib.md5(f"{j}:{d}".encode()).hexdigest()[:8]
-    return 1.0 if int(h, 16) % 2 == 0 else -1.0
+    return 1.0 if py_u32(str(j), salt=d) % 2 == 0 else -1.0
 
 
 _SRP_MATRIX = [
@@ -5635,7 +5634,7 @@ def _q246_oracle() -> str:
     # two texts cannot drift if HLL_P/alpha ever change
     m, bits = sketch.HLL_M, sketch._HLL_RHO_BITS
     pw, alpha = 1 << bits, sketch.HLL_ALPHA
-    v32 = "CAST(concat('0x', substring(md5(tok), 9, 8)) AS BIGINT)"
+    v32 = duck_u32("tok", half=1)
     raw = (
         f"{alpha} * {m}.0 * {m}.0 * {pw}.0"
         f" / CAST(s_present + ({m} - npresent)"
@@ -5648,8 +5647,7 @@ def _q246_oracle() -> str:
       FROM events),
     slices AS (
       SELECT day,
-             CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT)
-               % {m} AS bucket,
+             {duck_u32("tok")} % {m} AS bucket,
              CASE WHEN {v32} = 0 THEN {bits}
                   ELSE {bits} - length(bin({v32})) END AS rho
       FROM ud),

@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duck_u32, spark_u32
 from ..operators import dedup, scale, text
+from ..schema.sampling import HASH_MOD, duck_hash_bucket_sql, hash_bucket
 from ..sources.readers import load_table
 from .registry import query
 
@@ -277,10 +279,7 @@ def q99_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: A pure function of the id, so it can be stamped onto ANY frame
 #: carrying the id — no split table, no join.
 def _spark_split(col: str) -> str:
-    b = (
-        f"cast(conv(substring(md5(cast({col} as string)), 1, 8),"
-        f" 16, 10) as bigint) % 10"
-    )
+    b = f"{spark_u32(f'cast({col} as string)')} % 10"
     return (
         f"CASE WHEN {b} < 8 THEN 'train'"
         f" WHEN {b} = 8 THEN 'val' ELSE 'test' END"
@@ -288,10 +287,7 @@ def _spark_split(col: str) -> str:
 
 
 def _duck_split(col: str) -> str:
-    b = (
-        f"CAST(concat('0x', substr(md5(CAST({col} AS VARCHAR)), 1, 8))"
-        f" AS BIGINT) % 10"
-    )
+    b = f"{duck_u32(f'CAST({col} AS VARCHAR)')} % 10"
     return (
         f"CASE WHEN {b} < 8 THEN 'train'"
         f" WHEN {b} = 8 THEN 'val' ELSE 'test' END"
@@ -844,65 +840,53 @@ _Q112_ORACLE = f"""
     """
 
 
-def span_grams(
-    staged: DataFrame, span_k: int = SPAN_K, portable: bool = True
-) -> DataFrame:
-    """The windowed-gram table ``(doc_id, pos, end_pos, g)`` feeding
-    duplicate-span detection. ``portable=True`` emits the gram as the
-    joined k-token STRING (oracle-exact — DuckDB reproduces it);
-    ``portable=False`` is the production path: each window is hashed
-    to 64 bits with ``xxhash64`` DIRECTLY on the token slice (no
-    string is ever built), so the gram shuffle carries an 8-byte key
-    instead of k-token strings — the at-scale cost VERDICT r4 flagged.
-    Plan-asserted in ``tests/test_scale.py``; both variants produce
-    identical spans (a 64-bit collision across distinct grams is
-    ~2⁻⁶⁴ per pair and only ever ADDS a candidate span).
+@query("q112_duplicate_spans", headline=True, oracle=_Q112_ORACLE)
+def q112_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact duplicate-SPAN detection (the substring-dedup step of
+    modern pretraining pipelines, after document-level dedup): every
+    {SPAN_K}-token window that appears verbatim in MORE THAN ONE
+    document is a memorization-risk span; overlapping hits within a
+    document are merged into maximal spans (interval merge — classic
+    gaps-and-islands with a running max, since window i and window
+    i+g overlap for any gap g < k). Output: one row per maximal span
+    with its token range and duplicate-window count — the input to a
+    span-excision rewrite.
+
+    Distinct from q26/q28 (whole-document / near-dup) and q86
+    (frequent n-grams ranked corpus-wide): this localizes WHERE the
+    duplication sits inside each document.
+
+    Scale: the corpus-sized work is the windowed-gram explode and one
+    hash groupBy on the gram (map-side combined). The gram key is the
+    k-token string because the DuckDB oracle must reproduce the gram
+    values. Island windows are per-document — hash-parallel, bounded
+    partitions.
     """
-    gram = (
-        f"array_join(slice(toks, i, {span_k}), ' ')"
-        if portable
-        else f"xxhash64(slice(toks, i, {span_k}))"
-    )
-    # CASE guard: Spark's sequence(1, n-k+1) generates DESCENDING for
-    # short docs (the bigrams_expr trap) — DuckDB's range is empty
-    windows = (
-        f"CASE WHEN size(toks) < {span_k} THEN array()"
-        f" ELSE transform(sequence(1, size(toks) - {span_k} + 1),"
-        f" i -> struct(cast(i as bigint) as pos,"
-        f" cast(i + {span_k} - 1 as bigint) as end_pos,"
-        f" {gram} as g)) END"
-    )
     from ..caching import slot_persist
 
-    # the windowed-gram table fans out to the dup aggregate AND the
-    # hits join probe; without staging, the corpus-sized explode +
-    # gram construction evaluates twice (2 FileScans, no exchange
-    # reuse — the partial aggregate under the dup side blocks it).
-    # Separate slots per variant: the two plans must never evict each
-    # other mid-session (q112/q113 share the portable slot).
-    slot = (
-        "llm.duplicate_span_grams"
-        if portable
-        else "llm.duplicate_span_grams_x64"
-    )
-    return slot_persist(
-        slot,
-        staged.select(
-            "doc_id", F.explode(F.expr(windows)).alias("w")
-        ).select("doc_id", "w.pos", "w.end_pos", "w.g"),
-    )
-
-
-def duplicate_spans(
-    spark: SparkSession, sf_dir: str, portable: bool = True
-) -> DataFrame:
-    """q112's plan, parameterized by the gram representation — see
-    :func:`span_grams` for the portable/production trade."""
     docs = load_table(spark, sf_dir, "documents")
     staged = scale.spread_scan(
         docs, cols=["doc_id", "text"], by=["doc_id"]
     ).select("doc_id", F.expr(TOK).alias("toks"))
-    sh = span_grams(staged, SPAN_K, portable)
+    # CASE guard: Spark's sequence(1, n-k+1) generates DESCENDING for
+    # short docs (the bigrams_expr trap) — DuckDB's range is empty
+    windows = (
+        f"CASE WHEN size(toks) < {SPAN_K} THEN array()"
+        f" ELSE transform(sequence(1, size(toks) - {SPAN_K} + 1),"
+        f" i -> struct(cast(i as bigint) as pos,"
+        f" cast(i + {SPAN_K} - 1 as bigint) as end_pos,"
+        f" array_join(slice(toks, i, {SPAN_K}), ' ') as g)) END"
+    )
+    # the windowed-gram table fans out to the dup aggregate AND the
+    # hits join probe; without staging, the corpus-sized explode +
+    # gram construction evaluates twice (2 FileScans, no exchange
+    # reuse — the partial aggregate under the dup side blocks it).
+    sh = slot_persist(
+        "llm.duplicate_span_grams",
+        staged.select(
+            "doc_id", F.explode(F.expr(windows)).alias("w")
+        ).select("doc_id", "w.pos", "w.end_pos", "w.g"),
+    )
     dup = (
         sh.groupBy("g")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -935,35 +919,6 @@ def duplicate_spans(
             (F.max("end_pos") - F.min("pos") + 1).alias("span_tokens"),
         )
     )
-
-
-@query("q112_duplicate_spans", headline=True, oracle=_Q112_ORACLE)
-def q112_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicate-SPAN detection (the substring-dedup step of
-    modern pretraining pipelines, after document-level dedup): every
-    {SPAN_K}-token window that appears verbatim in MORE THAN ONE
-    document is a memorization-risk span; overlapping hits within a
-    document are merged into maximal spans (interval merge — classic
-    gaps-and-islands with a running max, since window i and window
-    i+g overlap for any gap g < k). Output: one row per maximal span
-    with its token range and duplicate-window count — the input to a
-    span-excision rewrite.
-
-    Distinct from q26/q28 (whole-document / near-dup) and q86
-    (frequent n-grams ranked corpus-wide): this localizes WHERE the
-    duplication sits inside each document.
-
-    Scale: the corpus-sized work is the windowed-gram explode and one
-    hash groupBy on the gram (map-side combined). The production path
-    is ``duplicate_spans(..., portable=False)``: grams are hashed to
-    64-bit (``xxhash64`` on the token slice — no string built) before
-    the shuffle, so the exchange carries 8-byte keys, never k-token
-    strings (plan-asserted in ``tests/test_scale.py``); this
-    registered entry runs ``portable=True`` (string grams) because
-    the DuckDB oracle must reproduce the gram values. Island windows
-    are per-document — hash-parallel, bounded partitions.
-    """
-    return duplicate_spans(spark, sf_dir, portable=True)
 
 
 def _q113_oracle() -> str:
@@ -1186,10 +1141,8 @@ def q130_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a persist slot (winner aggregate + verdict join + final
     rollup = three consumers, one scan+tokenize). Winner table ≤
     unique-segment-sized; the verdict join is seg_key-keyed and
-    co-partitioned with the winner aggregate's exchange. Production
-    swaps the md5 seg_key for xxhash64 so the exchange carries 8-byte
-    keys (q112's portable-flag pattern); md5 here keeps the twin
-    engine-portable.
+    co-partitioned with the winner aggregate's exchange. The seg_key
+    is md5 so the DuckDB twin replays it.
     """
     from ..caching import slot_persist
 
@@ -1261,8 +1214,6 @@ HH_SAFETY_DIV = 2
 
 
 def _q131_oracle() -> str:
-    from ..schema.sampling import HASH_MOD, duck_hash_bucket_sql
-
     thresh = HASH_MOD * HH_SAMPLE_PERMILLE // 1000
     return f"""
     WITH t AS (
@@ -1319,16 +1270,15 @@ def q131_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; pass 2's exchange carries candidate rows only.
     """
     from ..caching import slot_persist
-    from ..schema import sampling
 
-    thresh = sampling.HASH_MOD * HH_SAMPLE_PERMILLE // 1000
+    thresh = HASH_MOD * HH_SAMPLE_PERMILLE // 1000
     docs = load_table(spark, sf_dir, "documents")
     bg = slot_persist(
         "text.corpus_bigrams",
         scale.spread_scan(docs, cols=["doc_id", "text"], by=["doc_id"])
         .select("doc_id", F.expr(TOK).alias("__toks"))
         .select(
-            (sampling.hash_bucket("doc_id") < F.lit(thresh)).alias(
+            (hash_bucket("doc_id") < F.lit(thresh)).alias(
                 "in_sample"
             ),
             F.explode(F.expr(text.bigrams_expr("__toks"))).alias("bigram"),
@@ -2180,8 +2130,6 @@ WIN_TOP = 40
 
 
 def _q149_oracle() -> str:
-    from ..functions import hashing
-
     grams = (
         f"CASE WHEN len(toks) >= {WIN_K} THEN"
         f" list_transform(range(1, len(toks) - {WIN_K} + 2),"
@@ -2192,7 +2140,7 @@ def _q149_oracle() -> str:
     WITH t AS (SELECT doc_id, {DTOK} AS toks FROM documents),
     g AS (SELECT doc_id, {grams} AS grams FROM t),
     h AS (
-      SELECT doc_id, pos, ng, {hashing.duck_hash32('gram')} AS h
+      SELECT doc_id, pos, ng, {duck_u32('gram', salt=0)} AS h
       FROM (
         SELECT doc_id, generate_subscripts(grams, 1) AS pos,
                unnest(grams) AS gram, len(grams) AS ng
@@ -2255,18 +2203,17 @@ def q149_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     to regroup rows that started in the same array (measured 13× at
     sf0.1; the DuckDB oracle keeps the equivalent window-function
     formulation — two formulations, one contract, q135's pattern).
-    Hashes are portable md5-32 (the functions/hashing.py xxhash64
-    escape hatch applies at production). The selected set is
-    ~2/(w+1) of the gram count and is staged through a persist slot
-    feeding the per-doc sizes, the fingerprint-frequency filter, and
-    the pair join. Pairing ships only slim (fp, doc_id) rows (q28's
-    slim band join); the {WIN_MAX_DOCS}-doc frequency cap drops
+    Hashes are the engine's md5 convention (``functions/hashing.py``).
+    The selected set is ~2/(w+1) of the gram count and is staged
+    through a persist slot feeding the per-doc sizes, the
+    fingerprint-frequency filter, and the pair join. Pairing ships
+    only slim (fp, doc_id) rows (q28's slim band join); the
+    {WIN_MAX_DOCS}-doc frequency cap drops
     boilerplate fingerprints so no hot key can explode the self-join
     quadratically (q112's cap argument). The final per-pair counts
     are tiny; size lookups ride two keyed joins on the pair table.
     """
     from ..caching import slot_persist
-    from ..functions import hashing
 
     docs = load_table(spark, sf_dir, "documents")
     grams = (
@@ -2275,7 +2222,7 @@ def q149_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" i -> array_join(slice(toks, i, {WIN_K}), ' '))"
         f" ELSE array() END"
     )
-    hexpr = hashing.spark_hash32("g")
+    hexpr = spark_u32("g", salt=0)
     # full windows only (pos ≤ ng − w + 1), guarded so short docs
     # yield an empty array — sequence(1, 0) would generate a
     # DESCENDING phantom range (bigrams_expr's documented trap)
@@ -2482,8 +2429,7 @@ LP_DF_CAP = 8
     WITH t AS (
       SELECT doc_id, source,
              {{dsh}} AS shs,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 1000000 < 800000 AS is_labeled
+             {duck_hash_bucket_sql('doc_id')} < 800000 AS is_labeled
       FROM documents),
     feat AS (
       SELECT doc_id, source, is_labeled, unnest(shs) AS sh FROM t),
@@ -2531,8 +2477,6 @@ def q166_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     same step with the localCheckpoint loop pattern of
     ``graph.pagerank``'s Spark path.
     """
-    from ..schema.sampling import hash_bucket
-
     docs = load_table(spark, sf_dir, "documents")
     feat = (
         docs.select(

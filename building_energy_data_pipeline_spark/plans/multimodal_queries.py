@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import multimodal
+from ..functions.hashing import duck_u32
+from ..operators import multimodal, scale
 from ..operators.jpeg_codec import (
     encode_jpeg,
     encode_jpeg_arithmetic,
@@ -65,12 +66,11 @@ def _media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q53_multimodal_image_features",
-    oracle="""
+    oracle=f"""
     WITH img AS (
       SELECT doc_id AS media_id,
              md5(coalesce(text, '')) AS seedhex,
-             CAST(concat('0x', substr(md5(coalesce(text, '')), 1, 8))
-               AS BIGINT) AS seed
+             {duck_u32("coalesce(text, '')")} AS seed
       FROM documents
       WHERE doc_id % 3 = 1
     ), dims AS (
@@ -255,7 +255,12 @@ def q249_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (mapInPandas body import)
 
-    docs = (
+    # the synthetic metadata table arrives as ONE parquet split at test
+    # scales, which would serialize both Python codec stages on a single
+    # core; spread_scan spreads the 12-byte rows across the executor
+    # slots, and adds no exchange when the scan already has a split per
+    # slot (a production media scan has file-granular splits).
+    docs = scale.spread_scan(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 1)
         .select(
@@ -263,13 +268,6 @@ def q249_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             (8 + F.col("doc_id") % 9).cast("int").alias("height"),
             (8 + F.col("doc_id") % 7).cast("int").alias("width"),
         )
-        # the synthetic metadata table arrives as ONE parquet split at
-        # test scales, which would serialize both Python codec stages
-        # on a single core; spreading the 12-byte rows across the
-        # executor slots costs a trivial exchange. A production media
-        # scan already has file-granular splits — this is the local
-        # stand-in for that, not an extra shuffle at 100 TB.
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth_encode(batches):
@@ -373,7 +371,9 @@ def q255_mjpeg_video_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (mapInPandas body import)
 
-    docs = (
+    # spread the metadata rows across slots before the codec stages
+    # (q249's single-split note)
+    docs = scale.spread_scan(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
         .select(
@@ -382,9 +382,6 @@ def q255_mjpeg_video_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
             (8 + (F.col("doc_id") % 3) * 8).cast("int").alias("height"),
             (8 + (F.col("doc_id") % 2) * 8).cast("int").alias("width"),
         )
-        # spread the metadata rows across slots before the codec
-        # stages (q249's single-split note)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth_encode(batches):
@@ -492,7 +489,9 @@ def q257_gif_animation_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (mapInPandas body import)
 
-    docs = (
+    # spread the metadata rows across slots before the codec stages
+    # (q249's single-split note)
+    docs = scale.spread_scan(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 2)
         .select(
@@ -501,9 +500,6 @@ def q257_gif_animation_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
             (6 + F.col("doc_id") % 10).cast("int").alias("height"),
             (5 + F.col("doc_id") % 9).cast("int").alias("width"),
         )
-        # spread the metadata rows across slots before the codec
-        # stages (q249's single-split note)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth_encode(batches):
@@ -646,16 +642,15 @@ def q256_adpcm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (mapInPandas body import)
 
-    docs = (
+    # spread the metadata rows across slots before the codec stages
+    # (q249's single-split note)
+    docs = scale.spread_scan(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 1)
         .select(
             F.col("doc_id").alias("media_id"),
             (32 + F.col("doc_id") % 32).cast("int").alias("n"),
         )
-        # spread the metadata rows across slots before the codec
-        # stages (q249's single-split note)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth_encode(batches):
@@ -792,7 +787,9 @@ def q254_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (mapInPandas body import)
 
-    docs = (
+    # spread the metadata rows across slots before the codec stages
+    # (q249's single-split note)
+    docs = scale.spread_scan(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 2)
         .select(
@@ -800,9 +797,6 @@ def q254_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             (8 + (F.col("doc_id") % 5) * 6).cast("int").alias("height"),
             (8 + (F.col("doc_id") % 4) * 7).cast("int").alias("width"),
         )
-        # spread the metadata rows across slots before the codec
-        # stages (q249's single-split note)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth_encode(batches):
@@ -979,16 +973,15 @@ def q259_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (mapInPandas body import)
 
-    docs = (
+    # spread the metadata rows across slots before the codec stages
+    # (q249's single-split note)
+    docs = scale.spread_scan(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
         .select(
             F.col("doc_id").alias("media_id"),
             (300 + (F.col("doc_id") % 7) * 120).cast("int").alias("n"),
         )
-        # spread the metadata rows across slots before the codec
-        # stages (q249's single-split note)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth_encode(batches):

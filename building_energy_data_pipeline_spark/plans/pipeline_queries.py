@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duck_u32, spark_u32
 from ..functions.scalar import dec_sum_sql
 from ..operators import dedup, scale, similarity, text
 from ..schema.sampling import HASH_MOD, duck_hash_bucket_sql, hash_bucket
@@ -389,12 +390,11 @@ def q93_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q103_jsonl_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT source,
            COUNT(*) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-           CAST(SUM(CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT))
-             AS BIGINT) AS text_checksum
+           CAST(SUM({duck_u32("text")}) AS BIGINT) AS text_checksum
     FROM documents
     WHERE doc_id % 5 = 0
     GROUP BY source
@@ -407,8 +407,8 @@ def q103_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checksums the ORIGINAL parquet, so the hash match proves
     the JSON encode/decode cycle is lossless (string escaping,
     unicode, null handling, long fidelity). The checksum is an
-    integer sum of each text's first-8-hex md5 — any corrupted
-    character in any document changes it.
+    integer sum of each text's md5 hash (``functions/hashing.py``) —
+    any corrupted character in any document changes it.
 
     Scale: filtered slice in, parallel directory-of-parts out; the
     read-back is a schema'd scan (no inference pass).
@@ -433,12 +433,7 @@ def q103_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count("*").alias("n_docs"),
                 F.sum("n_chars").alias("sum_chars"),
-                F.sum(
-                    F.expr(
-                        "cast(conv(substr(md5(text), 1, 8), 16, 10)"
-                        " as bigint)"
-                    )
-                ).alias("text_checksum"),
+                F.sum(F.expr(spark_u32("text"))).alias("text_checksum"),
             )
             # materialize before the temp dir vanishes (q93 pattern)
             .localCheckpoint(eager=True)
@@ -542,8 +537,7 @@ _MIX_TH_SQL = "(2500 + (CAST(substr(source, 4) AS INT) % 3) * 2500)"
     oracle=f"""
     WITH kept AS (
       SELECT source,
-             CASE WHEN (CAST(concat('0x',
-                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+             CASE WHEN ({duck_u32("CAST(doc_id AS VARCHAR)")}
                     % 10000) < {_MIX_TH_SQL}
                   THEN 1 ELSE 0 END AS keep
       FROM documents
@@ -571,10 +565,7 @@ def q88_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     th = F.expr("2500 + (cast(substr(source, 4) as int) % 3) * 2500")
-    bucket = F.expr(
-        "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10)"
-        " as bigint) % 10000"
-    )
+    bucket = F.expr(f"{spark_u32('cast(doc_id as string)')} % 10000")
     return (
         docs.select(
             "source",

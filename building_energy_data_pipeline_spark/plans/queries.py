@@ -23,6 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
+from ..schema.sampling import duck_hash_bucket_sql
 from ..sources.readers import load_table
 from .registry import HEADLINE, QuerySpec, REGISTRY, query
 
@@ -861,7 +862,7 @@ def q25_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q78_random_sample",
-    oracle="""
+    oracle=f"""
     WITH base AS (SELECT o_orderkey, o_totalprice FROM orders),
     stats AS (
       SELECT COUNT(*) AS total, MIN(o_orderkey) AS mn, MAX(o_orderkey) AS mx
@@ -870,8 +871,7 @@ def q25_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_totalprice
     FROM base, stats
     WHERE total <= 100
-       OR (CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
-                AS BIGINT) % 1000000) * total
+       OR ({duck_hash_bucket_sql("o_orderkey")}) * total
           < (GREATEST(2, LEAST(100, 100000, total // 200)) - 2) * 1000000
        OR o_orderkey IN (mn, mx)
     """,
@@ -900,7 +900,7 @@ def q78_random_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q79_stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH sized AS (
       SELECT c_custkey, c_mktsegment,
              COUNT(*) OVER (PARTITION BY c_mktsegment) AS sz,
@@ -910,8 +910,7 @@ def q78_random_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c_custkey, c_mktsegment
     FROM sized
-    WHERE (CAST(concat('0x', substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))
-                AS BIGINT) % 1000000) * sz < quota * 1000000
+    WHERE ({duck_hash_bucket_sql("c_custkey")}) * sz < quota * 1000000
     """,
 )
 def q79_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators import dedup, linear, scale, similarity, sketch, text
+from ..schema.sampling import duck_hash_bucket_sql, hash_bucket
 from ..sources.readers import load_table
 from .registry import query
 
@@ -101,17 +102,18 @@ def q28_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, {dedup.duck_simhash_sql("th")} AS simhash
     FROM (SELECT doc_id,
-                 {dedup.DUCK_TOKEN_HASHES.format(tokens=DTOK)} AS th
+                 {dedup.duck_token_hashes_sql(DTOK)} AS th
           FROM documents)
     """,
 )
 def q29_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (unit token weights) — the
     Hamming-distance dedup substrate. The operator itself is a narrow
-    projection; the query prepends one pinned repartition of the
-    compact doc rows so the CPU-bound interpreted bit-vote folds
-    (32 bits × tokens per doc) escape the input file's row-group
-    parallelism — measured 8× on a single-file sf0.1 corpus."""
+    projection; the query fans the doc rows out through
+    ``scale.spread_scan`` so the CPU-bound interpreted bit-vote folds
+    (32 bits × tokens per doc) escape a single-split input's row-group
+    parallelism — measured 8× on a single-file sf0.1 corpus — with no
+    exchange when the scan already has enough splits."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash(
         scale.spread_scan(docs, by=["doc_id"]), "doc_id", TOK
@@ -2476,8 +2478,7 @@ _Q165_PARTIALS = """
              CAST(n_chars AS BIGINT) AS x1,
              CAST(len({DTOK}) AS BIGINT) AS x2,
              CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 1000000 < 800000 AS is_train
+             {duck_hash_bucket_sql("doc_id")} < 800000 AS is_train
       FROM documents),
     p AS (SELECT {_Q165_PARTIALS} FROM feats WHERE is_train),
     w AS (SELECT {_RW['w0']} AS w0, {_RW['w1']} AS w1, {_RW['w2']} AS w2
@@ -2510,8 +2511,6 @@ def q165_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     any point; held-out docs are scored by weights their rows never
     influenced (q139's transfer discipline).
     """
-    from ..schema.sampling import hash_bucket
-
     docs = load_table(spark, sf_dir, "documents")
     feats = docs.select(
         "doc_id",

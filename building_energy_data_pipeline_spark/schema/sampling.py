@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duck_u32, spark_u32
+
 MAX_ROWS = 100_000
 SAMPLING_RATIO = 0.005  # == 1/200; integer form RATIO_DEN below
 RATIO_DEN = 200
@@ -31,29 +33,18 @@ HASH_MOD = 1_000_000
 
 
 def hash_bucket(col: str) -> F.Column:
-    """Deterministic per-row bucket in ``[0, HASH_MOD)``: first 8 hex
-    chars of ``md5(cast(col as string))`` parsed base-16. Engine-
-    portable — DuckDB replays it as
-    ``CAST(concat('0x', substr(md5(CAST(col AS VARCHAR)),1,8)) AS
-    BIGINT) % 1000000`` — so hash-sampled queries get a real value
-    oracle instead of a rows-only check. Narrow expression, no
-    shuffle, stays in codegen.
+    """Deterministic per-row bucket in ``[0, HASH_MOD)``: the engine's
+    md5 hash (``functions/hashing.py``) of ``cast(col as string)``.
+    Engine-portable — DuckDB replays it as :func:`duck_hash_bucket_sql`
+    — so hash-sampled queries get a real value oracle instead of a
+    rows-only check. Narrow expression, no shuffle, stays in codegen.
     """
-    return (
-        F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % HASH_MOD
-    )
+    return F.expr(f"{spark_u32(f'cast({col} as string)')} % {HASH_MOD}")
 
 
 def duck_hash_bucket_sql(col: str) -> str:
-    """DuckDB twin of :func:`hash_bucket` — the single source for the
-    md5-bucket idiom's oracle text (DuckDB has no ``conv``; the
-    hex-cast form is its integer-identical equivalent)."""
-    return (
-        f"CAST(concat('0x', substr(md5(CAST({col} AS VARCHAR)), 1, 8))"
-        f" AS BIGINT) % {HASH_MOD}"
-    )
+    """DuckDB twin of :func:`hash_bucket`."""
+    return f"{duck_u32(f'CAST({col} AS VARCHAR)')} % {HASH_MOD}"
 
 
 def hash_random_sample(df: DataFrame, key_col: str, n: int) -> DataFrame:

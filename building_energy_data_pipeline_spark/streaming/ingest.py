@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..etl.loader import TIMESTAMPS, time_bounds, time_window
+
 #: the long fact-table schema (SURVEY §1.2 `raw`)
 RAW_SCHEMA = T.StructType(
     [
@@ -153,13 +155,13 @@ def write_stream_idempotent(
     at finer grain.
 
     Scale: the anti-join prunes the existing side to the batch's
-    key/time bounds first (predicate pushdown on min/max ts ±
-    tolerance), so each batch touches only the overlapping slice of
-    the warehouse, not its history; ``partition_by`` layout makes
-    that slice partition-pruned.
+    time bounds first (predicate pushdown on min/max ts ± tolerance;
+    one aggregate job per micro-batch, the bounds rendered by the
+    loader's ``time_window`` so no time zone moves them), so each
+    batch touches only the overlapping slice of the warehouse, not
+    its history; ``partition_by`` layout makes that slice
+    partition-pruned.
     """
-    from pyspark.sql import functions as _F
-
     keys = list(unique_keys)
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
@@ -175,20 +177,14 @@ def write_stream_idempotent(
             ts_col = next(
                 (k for k in keys if k in ("timestamp", "ts")), None
             )
-            if ts_col is not None:
-                bounds = fresh.agg(
-                    _F.min(ts_col).alias("lo"), _F.max(ts_col).alias("hi")
-                ).first()
-                if bounds["lo"] is not None:
+            ts_type = batch_df.schema[ts_col].dataType if ts_col else None
+            if isinstance(ts_type, TIMESTAMPS):
+                b = fresh.agg(*time_bounds(ts_col, ts_type)).first()
+                if b["lo"] is not None:
                     existing = existing.filter(
-                        _F.col(ts_col).between(
-                            _F.expr(f"TIMESTAMP \'{bounds['lo']}\' - INTERVAL {tolerance}"),
-                            _F.expr(f"TIMESTAMP \'{bounds['hi']}\' + INTERVAL {tolerance}"),
-                        )
+                        time_window(ts_col, ts_type, b["lo"], b["hi"], tolerance)
                     )
-                fresh = fresh.join(existing.select(*keys), keys, "left_anti")
-            else:
-                fresh = fresh.join(existing.select(*keys), keys, "left_anti")
+            fresh = fresh.join(existing.select(*keys), keys, "left_anti")
         writer = fresh.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*list(partition_by))

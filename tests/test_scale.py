@@ -465,66 +465,6 @@ class TestSlotPersistHardening:
         caching.release_caches()
 
 
-class TestSpanGramPortability:
-    """q112's production gram path (VERDICT r4 #2): portable=False
-    must hash each k-token window to 64 bits BEFORE the shuffle —
-    the exchange then carries an 8-byte key, never k-token strings —
-    and produce the identical span report."""
-
-    def test_x64_grams_match_portable_spans(self, spark, sf_dir):
-        from building_energy_data_pipeline_spark.caching import (
-            release_caches,
-        )
-        from building_energy_data_pipeline_spark.plans.llm_queries import (
-            duplicate_spans,
-        )
-
-        cols = ["doc_id", "span_id", "start_pos", "end_pos",
-                "n_dup_grams", "span_tokens"]
-        portable = sorted(
-            tuple(r) for r in duplicate_spans(
-                spark, sf_dir, portable=True
-            ).select(*cols).collect()
-        )
-        hashed = sorted(
-            tuple(r) for r in duplicate_spans(
-                spark, sf_dir, portable=False
-            ).select(*cols).collect()
-        )
-        assert portable == hashed and len(portable) > 0
-        release_caches()
-
-    def test_x64_exchange_carries_no_string_gram(self, spark, sf_dir):
-        from building_energy_data_pipeline_spark.caching import (
-            release_caches,
-        )
-        from building_energy_data_pipeline_spark.operators import scale
-        from building_energy_data_pipeline_spark.plans import llm_queries
-        from building_energy_data_pipeline_spark.sources.readers import (
-            load_table,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        staged = scale.spread_scan(
-            docs, cols=["doc_id", "text"], by=["doc_id"]
-        ).select(
-            "doc_id", F.expr(llm_queries.TOK).alias("toks")
-        )
-        sh = llm_queries.span_grams(staged, portable=False)
-        # the gram column itself is the 8-byte hash...
-        assert dict(sh.dtypes)["g"] == "bigint"
-        # ...computed straight off the token slice: no string gram is
-        # ever BUILT, so none can ride the exchange
-        plan = explain_str(
-            llm_queries.duplicate_spans(spark, sf_dir, portable=False)
-        )
-        assert "xxhash64" in plan
-        assert "array_join" not in plan, (
-            "string grams are still being constructed on the x64 path"
-        )
-        release_caches()
-
-
 class TestSourceShingleSlot:
     def test_q30_q123_share_one_staged_shingle_table(self, spark, sf_dir):
         """The source-blocked pair queries must read ONE persisted

@@ -213,6 +213,43 @@ class TestStreamingIdempotentSink:
         assert spark.read.parquet(wh).count() == 5
 
 
+    @pytest.mark.parametrize("driver_tz", ["UTC", "Asia/Kolkata"])
+    def test_replay_is_dropped_in_any_driver_zone(
+        self, spark, tmp_path, monkeypatch, driver_tz
+    ):
+        """The sink's time bounds cross the driver as epoch micros: a
+        driver zone other than the session's must not shift the pruning
+        window and let replayed rows through the anti-join."""
+        import shutil
+        import time
+
+        from building_energy_data_pipeline_spark.streaming import (
+            write_stream_idempotent,
+        )
+
+        monkeypatch.setenv("TZ", driver_tz)
+        time.tzset()
+        try:
+            rows = [
+                (T0 + dt.timedelta(hours=h), "b1", "electricity", float(h))
+                for h in range(24)
+            ]
+            wh = str(tmp_path / "wh" / "raw")
+            keys = ["timestamp", "building_id", "meter"]
+            write_batch(spark, str(tmp_path / "in1"), rows)
+            shutil.copytree(tmp_path / "in1", tmp_path / "in2")
+            for i in (1, 2):  # the replay runs through a fresh checkpoint
+                wait_drained(
+                    write_stream_idempotent(
+                        read_meter_stream(spark, str(tmp_path / f"in{i}")),
+                        wh, "raw", keys, str(tmp_path / f"ckpt{i}"),
+                    )
+                )
+            assert spark.read.parquet(wh).count() == 24
+        finally:
+            monkeypatch.undo()
+            time.tzset()
+
     def test_partitioned_sink_drops_rows_replayed_across_batches(
         self, spark, tmp_path
     ):
